@@ -1,48 +1,51 @@
 """Bounded process-lifetime memos (r11, ADVICE #4 / VERDICT #7).
 
 The compile-latency memos (expression trees, scan metadata, sampled
-JSON schemas) are keyed on values that grow without bound in a
-long-lived service — every distinct literal, every (path, mtime, size)
-revision — so each memo is capped LRU-style: insertion-ordered dict,
-hits refresh recency, inserts past ``maxsize`` evict the least
-recently used entry. Eviction only ever costs a rebuild of an
-identical value (the documented contract of every consumer), so a
-racing reader under the compile thread pool is safe: dict get/set are
-GIL-atomic, and the worst interleaving is an extra rebuild.
+JSON schemas, uniqueness probes) are keyed on values that grow without
+bound in a long-lived service — every distinct literal, every (path,
+mtime, size) revision — so each memo is capped LRU-style: every hit
+(``m[k]`` or ``m.get(k)``) refreshes recency, and inserts past
+``maxsize`` evict the least recently used entry. Eviction only ever
+costs a rebuild of an identical value (the documented contract of every
+consumer), so a racing reader under the compile thread pool is safe:
+each OrderedDict operation is GIL-atomic, and the worst interleaving is
+an extra rebuild.
 """
 
 from __future__ import annotations
 
+from collections import OrderedDict
 
-class BoundedMemo(dict):
-    """dict with LRU eviction at ``maxsize`` entries."""
+
+class BoundedMemo(OrderedDict):
+    """OrderedDict with LRU eviction at ``maxsize`` entries."""
 
     def __init__(self, maxsize: int) -> None:
         super().__init__()
         self._maxsize = maxsize
 
-    def get(self, key, default=None):
+    def __getitem__(self, key):
+        value = super().__getitem__(key)
         try:
-            value = super().__getitem__(key)
-        except KeyError:
-            return default
-        # refresh recency (delete + reinsert moves to the ordered end);
-        # tolerate a concurrent eviction of the same key
-        try:
-            super().__delitem__(key)
-        except KeyError:
+            self.move_to_end(key)
+        except KeyError:      # evicted by a concurrent insert
             pass
-        super().__setitem__(key, value)
         return value
 
-    def __setitem__(self, key, value) -> None:
+    def get(self, key, default=None):
         try:
-            super().__delitem__(key)
+            return self[key]
+        except KeyError:
+            return default
+
+    def __setitem__(self, key, value) -> None:
+        super().__setitem__(key, value)
+        try:
+            self.move_to_end(key)
         except KeyError:
             pass
-        super().__setitem__(key, value)
         while len(self) > self._maxsize:
             try:
-                super().__delitem__(next(iter(self)))
-            except (StopIteration, KeyError, RuntimeError):
+                self.popitem(last=False)
+            except KeyError:
                 break

@@ -3,9 +3,10 @@
 This replaces the reference's execution loop (reference:
 rdfizer/rdfizer/semantify.py:9957-15037 — per-source row-at-a-time
 executors) with a compiler that emits one declarative DataFrame plan per
-TriplesMap and unions them into the dataset. Catalyst then handles column
-pruning, predicate pushdown, join strategy (broadcast vs sort-merge via
-AQE) and whole-stage codegen.
+TriplesMap — or one per logical source for the projection-only
+TriplesMaps that share it — and unions them into the dataset. Catalyst
+then handles column pruning, predicate pushdown, join strategy
+(broadcast vs sort-merge via AQE) and whole-stage codegen.
 
 Compile-time rewrites carried over from the reference because Catalyst
 cannot see RML semantics:
@@ -28,12 +29,14 @@ from __future__ import annotations
 import os
 import re
 import threading
+from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .._memo import BoundedMemo
 from ..ir import (
     CONSTANT, FUNCTION, GATHER, PARENT, QUOTED, REFERENCE, TEMPLATE,
     TriplesMap, TermMap,
@@ -43,6 +46,26 @@ from .terms import (
     CompiledValue, ExprLayers, _col, _memo_tree, canonical_string,
     compile_term_map, compile_template, valid_value,
 )
+
+
+@dataclass
+class _TMPass:
+    """One TriplesMap's compiled terms before any plan is built: the
+    scan frame (``df``) and the layer columns its terms reference, the
+    subject and row filter, and the (p, o, g, valid, …) struct entries
+    of its single explode pass — plus the join closures, N:1 fusers and
+    gather branches that give it a plan of its own."""
+
+    tm: TriplesMap
+    df: DataFrame
+    layers: ExprLayers
+    subject_term: TermMap
+    subj: CompiledValue
+    base_filter: object
+    entries: list = field(default_factory=list)
+    branches: list = field(default_factory=list)
+    deferred: list = field(default_factory=list)
+    fusers: list = field(default_factory=list)
 
 
 def _tcol(name: str, alias: str):
@@ -72,8 +95,11 @@ GENERAL_PREDICATES = (
 
 # module-wide memo for the compile-time uniqueness probes (dedup
 # elision + raw join-key checks): keyed on file stats so a changed file
-# re-probes but repeated compiles of the same sources don't re-scan
-_PROBE_CACHE: dict = {}
+# re-probes but repeated compiles of the same sources don't re-scan.
+# Bounded: every revision of every probed file adds keys, a slow leak
+# in a long-lived service (webapi); eviction only costs a re-probe
+_PROBE_CACHE: dict = BoundedMemo(1024)
+_MISS = object()
 
 
 def _stat_key(source, _glob) -> tuple:
@@ -344,6 +370,7 @@ class MappingPlanner:
         # the plan census and the persist() reuse depend on).
         self._compile_lock = threading.RLock()
         self._count_parent_refs()
+        self._fusion = self._fusion_groups()
 
     # ------------------------------------------------------------------
     def _resolve_tm(self, tm_id: str, context: str) -> TriplesMap:
@@ -443,7 +470,8 @@ class MappingPlanner:
     # feeding the splittable line path, not a checkpoint.
     def _json_scan(self, ls) -> "DataFrame":
         from ..sources import (
-            _stage_remote, apply_json_iterator, json_base, source_bytes)
+            _stage_remote, apply_json_iterator, json_base, source_bytes,
+            staged_path)
 
         # remote (HTTP) documents stage to a local file first, exactly as
         # read_source does — spark.read.json cannot list an http:// path
@@ -452,17 +480,16 @@ class MappingPlanner:
         base = self._scan_cache.get(bkey)
         if base is None:
             base = json_base(self.spark, src)
-            # count sharers by their STAGED path (ADVICE r10 #2): for
-            # http(s) sources the staged local path never equals the
-            # raw source string, so comparing against t.source.source
-            # undercounted exactly the multi-reader remote case the
-            # checkpoint gate targets (_stage_remote is a pass-through
-            # for local paths and an existence probe — never a second
-            # download — for already-staged URLs)
-            n_readers = sum(
-                1 for t in self.tms
+            # count the plan passes that read this document: a fused
+            # logical-source group is ONE reader, every other TM one
+            # each. Sharers are matched by their STAGED path (ADVICE r10
+            # #2 — an http(s) source never equals its raw URL), computed
+            # without I/O: counting must neither download another TM's
+            # document nor fail on an unreachable one
+            n_readers = len({
+                self._fusion.get(t.tm_id, t.tm_id) for t in self.tms
                 if t.source.fmt == "json"
-                and _stage_remote(str(t.source.source)) == src)
+                and staged_path(str(t.source.source)) == src})
             gate_mb = int(os.environ.get("SDM_JSON_CKPT_MAX_MB", "512"))
             nbytes = source_bytes(src)
             if n_readers > 1 and 0 <= nbytes <= gate_mb * (1 << 20):
@@ -585,8 +612,49 @@ class MappingPlanner:
         return self.scan(tm)
 
     # ------------------------------------------------------------------
+    def _single_pass(self, tm: TriplesMap) -> bool:
+        """True when ``compile_tm`` builds this TM as scan → layer
+        columns → one explode and nothing else: no gather or quoted
+        subject, and every POM a projection, a same-source join without
+        condition, a self-join elimination or a same-source quoted term
+        without condition — no join, fused left join or gather branch."""
+        if tm.subject.term.kind in (GATHER, QUOTED):
+            return False
+        key = tm.source.cache_key()
+        for pom in tm.poms:
+            om = pom.obj
+            if om.kind in (TEMPLATE, REFERENCE, CONSTANT, FUNCTION):
+                continue
+            ptm = self.tm_by_id.get(getattr(om, "parent_tm", None))
+            if (om.kind not in (PARENT, QUOTED) or ptm is None
+                    or ptm.source.cache_key() != key):
+                return False
+            j = om.join
+            if j and j.child and not (om.kind == PARENT
+                                      and j.child == j.parent):
+                return False
+        return True
+
+    def _fusion_groups(self) -> dict[str, tuple]:
+        """tm_id → logical-source key of every asserted single-pass TM
+        that shares its source with another one; compile_all fuses each
+        such group into one pass."""
+        by_key: dict[tuple, list[str]] = {}
+        for tm in self.tms:
+            if tm.kind != "NonAssertedTriplesMap" and self._single_pass(tm):
+                by_key.setdefault(tm.source.cache_key(), []).append(tm.tm_id)
+        return {t: k for k, ids in by_key.items() if len(ids) > 1
+                for t in ids}
+
     def compile_all(self) -> DataFrame:
         """Union of all asserted TriplesMap outputs (+ global dedup).
+
+        One scan and one explode per logical source: the single-pass TMs
+        (``_single_pass``) that share a source compile their terms into
+        one shared ExprLayers (``_tm_pass``) and are emitted as ONE pass
+        (``_emit_fused``) — the reference likewise groups TriplesMaps by
+        source and loads each source once (functions.py:651-995,
+        files_sort). Every other TM keeps its own plan (``compile_tm``).
 
         Dedup is one shuffle-based ``dropDuplicates`` over the union — the
         distributed equivalent of the reference's PTT/DTT in-memory dedup
@@ -594,29 +662,53 @@ class MappingPlanner:
         (semantify.py:212-265) are unnecessary because the shuffle spills.
         """
         asserted = [tm for tm in self.tms if tm.kind != "NonAssertedTriplesMap"]
-        if len(asserted) > 1:
-            # Compile TMs from a thread pool: building Column trees is
-            # one py4j socket round trip PER OPERATION, so a multi-TM
-            # compile is ~75% driver-side socket wait (profiled: 14k
-            # round trips, 3 s, for a 10-TM mapping). Independent TMs
-            # overlap that latency; the planner's shared caches are
-            # serialized behind _compile_lock, so every shared subplan
-            # (scans, parent pairs/groups, probes) is still built
-            # exactly once and the emitted plan is the same as the
-            # serial compile's. Order is preserved by pool.map.
-            from concurrent.futures import ThreadPoolExecutor
+        # compile units: [tm] for a TM with its own plan, the member list
+        # for a fused group (at its first member's position)
+        units: list[list[TriplesMap]] = []
+        groups: dict[tuple, list[TriplesMap]] = {}
+        for tm in asserted:
+            key = self._fusion.get(tm.tm_id)
+            if key is None:
+                units.append([tm])
+            elif key in groups:
+                groups[key].append(tm)
+            else:
+                groups[key] = [tm]
+                units.append(groups[key])
 
-            with ThreadPoolExecutor(
-                    max_workers=min(8, len(asserted))) as pool:
-                compiled = list(pool.map(self.compile_tm, asserted))
-        else:
-            compiled = [self.compile_tm(tm) for tm in asserted]
+        def compile_unit(tms: list[TriplesMap]) -> list:
+            if tms[0].tm_id not in self._fusion:
+                return [self.compile_tm(tms[0])]
+            # a group compiles its members in order into ONE ExprLayers:
+            # deterministic layer names, so the expression trees memoized
+            # on them (terms._TREE_MEMO) are hit again by the next compile
+            layers = ExprLayers()
+            passes = [self._tm_pass(tm, layers) for tm in tms]
+            return [tp if tp is not None and tp.entries else None
+                    for tp in passes]
+
+        # Compile TMs from a thread pool: building Column trees is one
+        # py4j socket round trip PER OPERATION, so a multi-TM compile is
+        # ~75% driver-side socket wait (profiled: 14k round trips, 3 s,
+        # for a 10-TM mapping). Independent units overlap that latency;
+        # the planner's shared caches are serialized behind
+        # _compile_lock, so every shared subplan (scans, parent
+        # pairs/groups, probes) is still built exactly once and the
+        # emitted plan is the same as the serial compile's. Order is
+        # preserved by pool.map. A single unit compiles in the pool too:
+        # on a thread with an active session (the caller's), PySpark
+        # wraps every Column function in a call-site capture that costs
+        # five more round trips (getActiveSession, isDefined, conf get,
+        # origin set/clear); pool threads have no active session.
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(8, len(units) or 1)) as pool:
+            compiled = list(pool.map(compile_unit, units))
         parts_by_tm = [
-            (tm, part) for tm, part in zip(asserted, compiled)
-            if part is not None
+            (tm, part) for tms, parts in zip(units, compiled)
+            for tm, part in zip(tms, parts) if part is not None
         ]
-        parts = [p for _, p in parts_by_tm]
-        if not parts:
+        if not parts_by_tm:
             schema = "s string, p string, o string, g string"
             if self.track_rules:
                 schema += ", __rule string"
@@ -657,11 +749,8 @@ class MappingPlanner:
                         lambda t: _decide(t[0]), parts_by_tm))
             else:
                 decisions = [_decide(tm) for tm, _ in parts_by_tm]
-            deduped = []
+            units = []   # (compiled TM, needs its distinct)
             for (tm, part), (kind, nrefs) in zip(parts_by_tm, decisions):
-                if kind == "free":
-                    deduped.append(part)
-                    continue
                 if nrefs is not None:
                     # dedup below rendering: recompile this TM with the
                     # distinct keyed on (raw subject refs, entry index,
@@ -669,11 +758,17 @@ class MappingPlanner:
                     # bytes through the plan's dominant shuffle
                     npart = self.compile_tm(tm, narrow_refs=nrefs)
                     if npart is not None:
-                        deduped.append(npart)
+                        units.append((npart, False))
                         continue
-                deduped.append(dedup_triples(part, "spog"))
+                units.append((part, kind != "free"))
+            # the TMs are pairwise disjoint, so the distinct of a fused
+            # group's union is the union of its TMs' distincts
+            deduped = [dedup_triples(df, "spog") if distinct else df
+                       for df, distinct in self._fuse_units(units)]
             return reduce(DataFrame.union, deduped)
 
+        parts = [df for df, _ in
+                 self._fuse_units([(p, False) for _, p in parts_by_tm])]
         out = reduce(DataFrame.union, parts)
         if self.remove_duplicates and not self.collect_targets:
             # with target tracking the caller dedups per output (the
@@ -691,6 +786,24 @@ class MappingPlanner:
         if self.track_rules and not self.collect_targets:
             out = out.drop("__rule")
         return out
+
+    def _fuse_units(self, units: list) -> list:
+        """(DataFrame | _TMPass, flag) units → (DataFrame, flag) union
+        parts: passes with the same logical source and flag become one
+        fused part, placed where the group's first pass stood."""
+        slots: list = []
+        groups: dict[tuple, list] = {}
+        for unit, flag in units:
+            if not isinstance(unit, _TMPass):
+                slots.append((unit, flag))
+                continue
+            key = (unit.tm.source.cache_key(), flag)
+            if key not in groups:
+                groups[key] = []
+                slots.append((groups[key], flag))
+            groups[key].append(unit)
+        return [(self._emit_fused(u) if isinstance(u, list) else u, flag)
+                for u, flag in slots]
 
     # ------------------------------------------------------------------
     # dedup elision (see compile_all): static proof + bounded probe that
@@ -1103,7 +1216,22 @@ class MappingPlanner:
         duplicated across union branches (each extra scan/duplication is a
         multiplicative cost at 100 TB). Only join-valued POMs become
         separate union branches, since their row multiplicity differs.
+
+        This is the TM's OWN plan. ``compile_all`` uses it for every TM
+        that is not fused: TMs needing joins, gathers or a quoted
+        subject, TMs alone on their logical source, and narrow-dedup
+        recompiles. Single-pass TMs that share a source are instead
+        built by ``_tm_pass`` and emitted together by ``_emit_fused``.
         """
+        tp = self._tm_pass(tm, ExprLayers())
+        return None if tp is None else self._emit_tm(tp, narrow_refs)
+
+    def _tm_pass(self, tm: TriplesMap, layers: ExprLayers) -> _TMPass | None:
+        """Compile one TriplesMap's terms without building its plan: the
+        subject, row filter and struct entries over ``layers`` (which
+        collects the named layer columns), plus the closures/branches of
+        join and gather POMs. None when the subject map is skipped under
+        the ignore policy."""
         # R2RML/RML: a subject map's termType MUST be rr:IRI or
         # rr:BlankNode — literal subjects are invalid RDF (published
         # conformance case RMLTC0004b)
@@ -1138,7 +1266,6 @@ class MappingPlanner:
                           stacklevel=2)
             return None
 
-        layers = ExprLayers()
         subject_term = self._subject_term(tm)
         if (subject_term.kind == QUOTED and subject_term.join
                 and subject_term.join.child):
@@ -1172,18 +1299,15 @@ class MappingPlanner:
             )
             base_filter = base_filter & cond.valid & cond.expr
 
-        entries = []   # structs for the explode branch: (p, o, g, v, targets)
+        tp = _TMPass(tm, df, layers, subject_term, subj, base_filter)
         # rdf:type triples from rr:class (semantify.py:6556-6563); R2RML
         # emits into EVERY declared graph map, so one entry per graph
         for cls in tm.subject.rdf_classes:
             for graph in graphs:
-                entries.append((F.lit(RDF_TYPE), F.lit(f"<{cls}>"), graph,
-                                F.lit(True), _tset(tm.subject.term), None,
-                                (F.lit(""), f"<{cls}>")))
+                tp.entries.append((F.lit(RDF_TYPE), F.lit(f"<{cls}>"), graph,
+                                   F.lit(True), _tset(tm.subject.term), None,
+                                   (F.lit(""), f"<{cls}>")))
 
-        branches: list[DataFrame] = []
-        deferred = []  # join-valued POMs: closures over the layered base_df
-        fusers = []    # N:1 joins fused into the explode pass as left joins
         for pom in tm.poms:
             miss = self._missing_refs(df, self._pom_refs(tm, pom))
             if miss:
@@ -1200,24 +1324,32 @@ class MappingPlanner:
             out = self._compile_pom(tm, df, pom, graphs, layers)
             if (isinstance(out, tuple) and len(out) == 2
                     and isinstance(out[0], str) and out[0] == "fuse"):
-                fusers.append(out[1])
+                tp.fusers.append(out[1])
             elif isinstance(out, list):
-                entries.extend(out)
+                tp.entries.extend(out)
             elif callable(out):
-                deferred.append(out)
+                tp.deferred.append(out)
             else:
-                branches.append(out)
+                tp.branches.append(out)
+        return tp
 
+    def _emit_tm(self, tp: _TMPass,
+                 narrow_refs: list[str] | None = None) -> DataFrame | None:
+        """A TriplesMap pass as its own plan (see ``compile_tm``)."""
+        tm, df, subject_term = tp.tm, tp.df, tp.subject_term
+        entries = list(tp.entries)
+        branches = list(tp.branches)
         # every term above referenced named layer columns; materialize the
         # layered projections once, then filter + compute the subject
-        base_df = layers.apply(df).where(base_filter).withColumn("__s", subj.expr)
+        base_df = (tp.layers.apply(df).where(tp.base_filter)
+                   .withColumn("__s", tp.subj.expr))
         # non-fusable (1:N) joins branch from the pre-fuse frame so they
         # don't pay for left joins whose columns they never read
         pre_fuse_df = base_df
-        for fuse in fusers:
+        for fuse in tp.fusers:
             base_df, fuse_entries = fuse(base_df)
             entries.extend(fuse_entries)
-        branches.extend(build(pre_fuse_df) for build in deferred)
+        branches.extend(build(pre_fuse_df) for build in tp.deferred)
 
         if tm.subject.term.kind == GATHER:
             # subject-position gather (reference gather_subject,
@@ -1245,7 +1377,7 @@ class MappingPlanner:
             # fused N:1 joins are fine: their left joins already applied
             # to base_df and their entries carry the rendered parent
             # object, which is part of the narrow dedup key
-            if (not entries or deferred or branches
+            if (not entries or tp.deferred or branches
                     or tm.subject.term.kind == GATHER):
                 # shape drifted from what _tm_narrow_ok proved — let the
                 # caller fall back to the rendered distinct
@@ -1253,50 +1385,101 @@ class MappingPlanner:
             return self._narrow_entries(tm, base_df, entries, narrow_refs,
                                         subject_term)
         if entries:
-            # positional structs + ONE struct-level cast each (r11,
-            # guide §1.2 step 2): per-field .alias()/.cast() cost one
-            # py4j round trip each (~7 per entry × ~30 entries per wide
-            # TM); a positional struct plus a single named-struct cast
-            # is two calls and applies the identical field-wise string
-            # casts (Cast over struct<…> maps per field; identity casts
-            # are simplified away, so the optimized plan is the one the
-            # per-field form built). The cast also unifies the field
-            # NAMES, which array() requires across elements.
-            def fields(p, o, g, v, tset, rule=None, osplit=None):
-                fs = [p, o, g, v]
-                if self.collect_targets:
-                    fs.append(_target_array(tset))
-                if self.track_rules:
-                    fs.append(F.lit(rule))
-                return fs
-
-            stype = "p:string,o:string,g:string,v:boolean"
-            if self.collect_targets:
-                stype += ",t:array<string>"
-            if self.track_rules:
-                stype += ",r:string"
-            st = f"struct<{stype}>"
-            structs = F.array(*[
-                F.struct(*fields(*entry)).cast(st) for entry in entries
-            ])
-            out_cols = ["s", _tcol("__t.p", "p"),
-                        _tcol("__t.o", "o"), _tcol("__t.g", "g")]
-            if self.collect_targets:
-                out_cols.append(_tcol("__t.t", "__targets"))
-            if self.track_rules:
-                out_cols.append(_tcol("__t.r", "__rule"))
-            exploded = (
-                base_df.select(_tcol("__s", "s"), F.explode(structs).alias("__t"))
-                .where(_col("__t.v"))
-                .select(*out_cols)
-            )
-            branches.insert(0, exploded)
+            branches.insert(0, self._explode(base_df, entries))
         if not branches:
             # a TM with no classes and no POMs emits nothing (it may still
             # serve as a join parent) — drop it from the union rather than
             # scanning for zero columns
             return None
         return reduce(DataFrame.union, branches)
+
+    def _emit_fused(self, passes: list[_TMPass]) -> DataFrame:
+        """ONE scan and ONE explode for single-pass TriplesMaps that share
+        a logical source and an ExprLayers (see ``compile_all``). Each
+        TM's subject and row filter become named columns, every struct
+        entry carries its own subject, and its validity is ANDed with its
+        TM's filter — the shape ``compile_tm`` builds within one TM,
+        extended across TMs. A single pass is exactly its own
+        ``compile_tm`` plan."""
+        if len(passes) == 1:
+            return self._emit_tm(passes[0])
+        names: dict[tuple, str] = {}
+        cols: dict = {}
+
+        def named(prefix: str, key, col):
+            # TMs that built the same tree (memoized over the shared
+            # layer names) share one column
+            name = names.get((prefix, id(key)))
+            if name is None:
+                name = names[(prefix, id(key))] = f"{prefix}{len(names)}"
+                cols[name] = col
+            return _col(name)
+
+        subjects, entries = [], []
+        for tp in passes:
+            s = named("__s", tp.subj.expr, tp.subj.expr)
+            # without an rml:condition the filter is the subject's own
+            # validity, which the subject tree determines
+            plain = tp.base_filter is tp.subj.valid
+            f = named("__f", tp.subj.expr if plain else tp.base_filter,
+                      tp.base_filter)
+            for e in tp.entries:
+                subjects.append(s)
+                entries.append((*e[:3], e[3] & f, *e[4:]))
+        frame = tp.layers.apply(tp.df).withColumns(cols)
+        return self._explode(frame, entries, subjects)
+
+    def _explode(self, frame: DataFrame, entries: list,
+                 subjects: list | None = None) -> DataFrame:
+        """Struct entries (p, o, g, valid, targets[, rule[, osplit]]) →
+        triples through one ``explode``. The subject is ``frame``'s
+        ``__s`` column, or with ``subjects`` (a fused pass) entry i's
+        struct carries ``subjects[i]``."""
+        # positional structs + ONE struct-level cast each (r11,
+        # guide §1.2 step 2): per-field .alias()/.cast() cost one
+        # py4j round trip each (~7 per entry × ~30 entries per wide
+        # TM); a positional struct plus a single named-struct cast
+        # is two calls and applies the identical field-wise string
+        # casts (Cast over struct<…> maps per field; identity casts
+        # are simplified away, so the optimized plan is the one the
+        # per-field form built). The cast also unifies the field
+        # NAMES, which array() requires across elements.
+        def fields(p, o, g, v, tset, rule=None, osplit=None):
+            fs = [p, o, g, v]
+            if self.collect_targets:
+                fs.append(_target_array(tset))
+            if self.track_rules:
+                fs.append(F.lit(rule))
+            return fs
+
+        stype = "p:string,o:string,g:string,v:boolean"
+        if subjects is not None:
+            stype = "s:string," + stype
+        if self.collect_targets:
+            stype += ",t:array<string>"
+        if self.track_rules:
+            stype += ",r:string"
+        st = f"struct<{stype}>"
+        structs = F.array(*[
+            F.struct(*([subjects[i]] if subjects is not None else []),
+                     *fields(*entry)).cast(st)
+            for i, entry in enumerate(entries)
+        ])
+        out_cols = [_tcol("__t.p", "p"), _tcol("__t.o", "o"),
+                    _tcol("__t.g", "g")]
+        if self.collect_targets:
+            out_cols.append(_tcol("__t.t", "__targets"))
+        if self.track_rules:
+            out_cols.append(_tcol("__t.r", "__rule"))
+        if subjects is not None:
+            return (frame.select(F.explode(structs).alias("__t"))
+                    .where(_col("__t.v"))
+                    .select(_tcol("__t.s", "s"), *out_cols))
+        return (
+            frame.select(_tcol("__s", "s"), F.explode(structs).alias("__t"))
+            .where(_col("__t.v"))
+            .select("s", *out_cols)
+        )
 
     # ------------------------------------------------------------------
     def _narrow_entries(self, tm, base_df, entries, refs, subject_term):
@@ -1847,8 +2030,9 @@ class MappingPlanner:
 
         mkey = ("raw", parent_tm.source.cache_key(), parent_keys,
                 _stat_key(parent_tm.source.source, _glob))
-        if mkey in _PROBE_CACHE:
-            return _PROBE_CACHE[mkey]
+        res = _PROBE_CACHE.get(mkey, _MISS)
+        if res is not _MISS:
+            return res
         res = self._raw_key_unique_uncached(parent_tm, parent_keys)
         _PROBE_CACHE[mkey] = res
         return res

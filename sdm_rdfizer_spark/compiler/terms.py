@@ -257,6 +257,11 @@ class ExprLayers:
     each intermediate as a named column in layered projections makes
     every reuse a cheap attribute reference; Catalyst's CollapseProject
     keeps non-trivial aliases that are referenced more than once.
+
+    Every key is a function of the scan frame's columns and the planner's
+    base, so the TriplesMaps of one fused logical-source pass share ONE
+    instance (MappingPlanner.compile_all): equal subexpressions across
+    them become one column, and their layer names cannot collide.
     """
 
     def __init__(self) -> None:

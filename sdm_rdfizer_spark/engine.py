@@ -13,6 +13,7 @@ compose further or write via sinks).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +36,24 @@ def _write_turtle_out(triples, out: str) -> None:
     else:
         with open(out, "w", encoding="utf-8") as f:
             f.write(to_turtle(triples))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict):
+    """Set session conf keys for the duration of a block. On exit each
+    key gets its old value back, or is unset when it had none — a drain
+    or query leaves the session exactly as it found it."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -243,77 +262,72 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
     """Run full materialization per the config; returns the triples
     DataFrame per dataset (also written to the configured output folder)."""
     cfg: RunConfig = load_config(config)
-    owns_spark = spark is None
     spark = spark or default_session()
     results: dict[str, DataFrame] = {}
     os.makedirs(cfg.output_folder, exist_ok=True)
-    try:
-        for ds in cfg.datasets:
-            with open(ds.mapping_path, encoding="utf-8") as f:
-                text = f.read()
-            triples, target_frames = materialize_with_targets(
-                spark, text,
-                base_dir=os.path.dirname(os.path.abspath(ds.mapping_path)),
-                remove_duplicates=cfg.remove_duplicates,
-                infer_datatypes=cfg.infer_datatypes,
-                input_dedup=cfg.input_dedup,
-                missing_policy=cfg.missing_policy,
-                validate_csv=cfg.validate_csv,
-                gather_row_order=cfg.gather_row_order,
-                dedup_scope=cfg.dedup_scope,
-                dedup_elision=cfg.dedup_elision,
-            )
-            results[ds.name] = triples
-            if target_frames:
-                from .sinks import write_target
+    for ds in cfg.datasets:
+        with open(ds.mapping_path, encoding="utf-8") as f:
+            text = f.read()
+        triples, target_frames = materialize_with_targets(
+            spark, text,
+            base_dir=os.path.dirname(os.path.abspath(ds.mapping_path)),
+            remove_duplicates=cfg.remove_duplicates,
+            infer_datatypes=cfg.infer_datatypes,
+            input_dedup=cfg.input_dedup,
+            missing_policy=cfg.missing_policy,
+            validate_csv=cfg.validate_csv,
+            gather_row_order=cfg.gather_row_order,
+            dedup_scope=cfg.dedup_scope,
+            dedup_elision=cfg.dedup_elision,
+        )
+        results[ds.name] = triples
+        if target_frames:
+            from .sinks import write_target
 
-                # sink dedup of identical targets (reference
-                # is_repeat_output, functions.py:89-98): specs writing the
-                # same file with the same post-passes are computed ONCE
-                # over the union of their frames instead of overwriting
-                # each other in declaration order
-                merged: dict[tuple, tuple] = {}
-                for spec, frame in target_frames.items():
-                    key = (spec.path, spec.serialization,
-                           spec.compression, spec.encoding)
-                    if key in merged:
-                        prev_spec, prev = merged[key]
-                        merged[key] = (prev_spec,
-                                       prev.unionByName(frame).dropDuplicates())
-                    else:
-                        merged[key] = (spec, frame)
-                for spec, frame in merged.values():
-                    os.makedirs(os.path.dirname(os.path.abspath(spec.path)),
-                                exist_ok=True)
-                    write_target(frame, spec)
-
-            if not cfg.all_in_one_file:
-                if cfg.output_format in ("turtle", "ttl"):
-                    out = os.path.join(cfg.output_folder, ds.name + ".ttl")
-                    _write_turtle_out(triples, out)
+            # sink dedup of identical targets (reference
+            # is_repeat_output, functions.py:89-98): specs writing the
+            # same file with the same post-passes are computed ONCE
+            # over the union of their frames instead of overwriting
+            # each other in declaration order
+            merged: dict[tuple, tuple] = {}
+            for spec, frame in target_frames.items():
+                key = (spec.path, spec.serialization,
+                       spec.compression, spec.encoding)
+                if key in merged:
+                    prev_spec, prev = merged[key]
+                    merged[key] = (prev_spec,
+                                   prev.unionByName(frame).dropDuplicates())
                 else:
-                    out = os.path.join(cfg.output_folder, ds.name + ".nt")
-                    write_ntriples(triples, out, single_file=True)
+                    merged[key] = (spec, frame)
+            for spec, frame in merged.values():
+                os.makedirs(os.path.dirname(os.path.abspath(spec.path)),
+                            exist_ok=True)
+                write_target(frame, spec)
 
-        if cfg.all_in_one_file and results:
-            # reference: every dataset appended into one output file
-            # (semantify.py:9957-9968); here: union + global dedup + one write
-            merged = None
-            for df in results.values():
-                merged = df if merged is None else merged.unionByName(df)
-            if cfg.remove_duplicates:
-                merged = merged.dropDuplicates(["s", "p", "o", "g"])
+        if not cfg.all_in_one_file:
             if cfg.output_format in ("turtle", "ttl"):
-                _write_turtle_out(merged,
-                                  os.path.join(cfg.output_folder, "output.ttl"))
+                out = os.path.join(cfg.output_folder, ds.name + ".ttl")
+                _write_turtle_out(triples, out)
             else:
-                write_ntriples(merged,
-                               os.path.join(cfg.output_folder, "output.nt"),
-                               single_file=True)
-        return results
-    finally:
-        if owns_spark:
-            pass  # leave the session to the caller/runtime to manage
+                out = os.path.join(cfg.output_folder, ds.name + ".nt")
+                write_ntriples(triples, out, single_file=True)
+
+    if cfg.all_in_one_file and results:
+        # reference: every dataset appended into one output file
+        # (semantify.py:9957-9968); here: union + global dedup + one write
+        merged = None
+        for df in results.values():
+            merged = df if merged is None else merged.unionByName(df)
+        if cfg.remove_duplicates:
+            merged = merged.dropDuplicates(["s", "p", "o", "g"])
+        if cfg.output_format in ("turtle", "ttl"):
+            _write_turtle_out(merged,
+                              os.path.join(cfg.output_folder, "output.ttl"))
+        else:
+            write_ntriples(merged,
+                           os.path.join(cfg.output_folder, "output.nt"),
+                           single_file=True)
+    return results
 
 
 def materialize_incremental(

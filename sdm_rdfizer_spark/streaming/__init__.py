@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compiler.plan import MappingPlanner
+from ..engine import scoped_conf
 from ..ir import LogicalSource, TriplesMap
 from ..sources import read_parquet, read_source
 
@@ -211,7 +212,6 @@ def run_available_now(
         derived = max(1, min(par, int(input_bytes // (128 << 10)) + 1))
     state_parts = os.environ.get("SDM_STREAM_STATE_PARTITIONS") or str(
         derived)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     writer = (
         sdf.writeStream.format("memory")
         .queryName(name)
@@ -220,13 +220,9 @@ def run_available_now(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", state_parts)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_parts}):
         q = writer.start()
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -882,35 +878,24 @@ def stream_minhash_verify(
     # cores only when a trigger is big enough to want more waves
     # (~32 MB/task, so the exchange stays amortized).
     hash_parts = max(par, min(4 * par, int(trig_bytes // (32 << 20)) + 1))
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    try:
-        if not aqe_in_batch:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", str(batch_parts))
-            # no auto-broadcast inside the micro-batch body (r11): every
-            # BroadcastExchange runs as its own driver-scheduled job
-            # (plus a driver gap either side), and with batch_parts-sized
-            # static shuffles the equivalent shuffled join executes
-            # INSIDE the action's single job — profiled 2 broadcast-build
-            # jobs + ~0.6 s of gaps per trigger removed. Joins here are
-            # micro-frame×micro-frame, where the broadcast's win is
-            # latency-negative; production triggers with aqe_in_batch
-            # keep AQE's runtime broadcast decisions.
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # no auto-broadcast inside the micro-batch body (r11): every
+    # BroadcastExchange runs as its own driver-scheduled job (plus a
+    # driver gap either side), and with batch_parts-sized static
+    # shuffles the equivalent shuffled join executes INSIDE the
+    # action's single job — profiled 2 broadcast-build jobs + ~0.6 s of
+    # gaps per trigger removed. Joins here are micro-frame×micro-frame,
+    # where the broadcast's win is latency-negative; production
+    # triggers with aqe_in_batch keep AQE's runtime broadcast decisions.
+    batch_conf = {} if aqe_in_batch else {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(batch_parts),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    with scoped_conf(spark, batch_conf):
         q = (sdf.writeStream.foreachBatch(_process)
              .option("checkpointLocation", os.path.join(wd, "ckpt"))
              .trigger(availableNow=True).start())
         q.awaitTermination()
-    finally:
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_bcast is not None:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           prev_bcast)
     dropped = sum(cap_drops)
     if expect_cap_nonbinding and dropped:
         # the registered oracle replays BATCH-global cap semantics,

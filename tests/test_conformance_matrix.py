@@ -140,5 +140,13 @@ def test_streaming_rejects_gather_maps(spark, tmp_path):
       rml:gather ( [ rml:reference "label" ] );
       rml:gatherAs <http://www.w3.org/1999/02/22-rdf-syntax-ns#Seq> ] ] .
 """
-    with _pytest.raises(MappingError, match="gather"):
-        materialize_stream(spark, m)
+    # a projection-only TM on the same source does not pull the gather
+    # TM into a fused pass: it keeps its own compile_tm and its guard
+    m2 = m + f"""
+<#N> a rr:TriplesMap; {_csv(tmp_path)}
+  rr:subjectMap [ rr:template "http://x.org/n/{{code}}" ];
+  rr:predicateObjectMap [ rr:predicate ex:l; rr:objectMap [ rml:reference "label" ] ] .
+"""
+    for mapping in (m, m2):
+        with _pytest.raises(MappingError, match="gather"):
+            materialize_stream(spark, mapping)

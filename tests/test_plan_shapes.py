@@ -104,6 +104,36 @@ def test_xml_sample_scan_single_filescan(spark, tmp_path):
     assert plan.count("FileScan") == 1, plan
 
 
+def test_same_source_triples_maps_single_filescan(spark, tmp_path):
+    """k projection-only TriplesMaps over one CSV fuse into ONE scan and
+    one explode — with the dedup elided (unique ids) and with the global
+    distinct (duplicate ids) alike."""
+    from sdm_rdfizer_spark import materialize
+
+    k = 5
+    for name, ids in (("u", range(20)), ("d", [n % 7 for n in range(20)])):
+        src = tmp_path / f"{name}.csv"
+        src.write_text("id," + ",".join(f"p{i}" for i in range(k)) + "\n"
+                       + "".join(f"{n}," + ",".join(f"v{n}_{i}" for i in range(k))
+                                 + "\n" for n in ids))
+        m = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+@prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+@prefix ex: <http://x.org/> .
+""" + "".join(f"""<#T{i}> a rr:TriplesMap;
+  rml:logicalSource [ rml:source "{src}"; rml:referenceFormulation ql:CSV ];
+  rr:subjectMap [ rr:template "http://x.org/r/{{id}}" ];
+  rr:predicateObjectMap [ rr:predicate ex:p{i}; rr:objectMap [ rml:reference "p{i}" ] ] .
+""" for i in range(k))
+        for rd in (True, False):
+            df = materialize(spark, m, remove_duplicates=rd)
+            plan = _plan(df)
+            assert plan.count("FileScan") == 1, (name, rd, plan)
+            assert plan.count("Generate") == 1, (name, rd, plan)
+            assert df.count() == len(set(ids) if rd else ids) * k
+
+
 def test_sampling_is_pure_filter(spark, entry):
     """Deterministic sampling compiles to a filter over the scan — no
     shuffle, no Python, and column pruning still reaches the scan."""

@@ -329,3 +329,22 @@ def test_stream_dsir_batch_parity(spark):
     s = {tuple(r) for r in streamed.collect()}
     b = {tuple(r) for r in batch.collect()}
     assert s == b and len(s) > 0
+
+
+def test_drains_leave_session_conf_unchanged(spark, csv_dir):
+    """Both drains override session conf for their lifetime only: every
+    key comes back to its old value, and a key the session never set
+    (the broadcast threshold here) is unset again, not left at -1."""
+    from sdm_rdfizer_spark.streaming import stream_minhash_verify
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+            "spark.sql.autoBroadcastJoinThreshold")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    run_available_now(materialize_stream(spark, MAPPING % {"dir": csv_dir}),
+                      name="t_conf_scope").collect()
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    stream_minhash_verify(
+        spark, SF, num_hashes=16, bands=4, shingle_n=3, threshold=0.2,
+        min_shared_bands=1, max_candidates_per_batch_doc=None,
+        n_input_files=2).count()
+    assert {k: spark.conf.get(k, None) for k in keys} == before
