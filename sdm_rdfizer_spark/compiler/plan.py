@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import re
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,11 +37,12 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .._memo import BoundedMemo
+from ..config import Options
 from ..ir import (
     CONSTANT, FUNCTION, GATHER, PARENT, QUOTED, REFERENCE, TEMPLATE,
     TriplesMap, TermMap,
 )
-from ..sources import read_source
+from ..sources import read_source, source_bytes
 from .terms import (
     CompiledValue, ExprLayers, _col, _memo_tree, canonical_string,
     compile_term_map, compile_template, valid_value,
@@ -256,6 +257,25 @@ RAW_PROBE_BYTES = 512 * 1024 * 1024
 # hint (no file size to gate on; ~150 B/pair row ⇒ ~30 MB broadcast cap)
 DB_BROADCAST_ROWS = 200_000
 
+# largest total source size the dedup-elision proof's driver-side
+# uniqueness/injectivity probe will scan (at real scale the probe is a
+# column scan — still far cheaper than the full-output shuffle it
+# removes, but the cap keeps compile time predictable)
+DEDUP_ELISION_PROBE_BYTES = 4 << 30
+
+# narrow dedup only pays off once the rendered-triple distinct is
+# shuffle-bound: the layered post-shuffle re-render has a fixed
+# per-query cost that a small input never amortizes (sf0.1 bench:
+# 5.4 s direct vs 7.4 s narrow; sf1+: narrow wins and the gap
+# widens superlinearly). Below this source size keep the direct
+# rendered-distinct plan.
+NARROW_DEDUP_MIN_BYTES = 48 << 20
+
+# largest JSON document _json_scan pins with an eager localCheckpoint
+# when several plan passes read it (SCALE.md r11 sf10 note: at 5.8 GB
+# the checkpoint wins only ~11%, so the 512 MB gate stands)
+JSON_CKPT_MAX_BYTES = 512 << 20
+
 
 def _tset(*term_maps) -> set:
     """Union of the logical-target ids of the given term maps (incl. their
@@ -294,60 +314,20 @@ class MappingPlanner:
         triples_maps: list[TriplesMap],
         *,
         base: str | None = None,
-        remove_duplicates: bool = True,
-        infer_datatypes: bool = False,
-        dedup_scope: str = "spog",
         collect_targets: bool = False,
-        input_dedup: bool = False,
-        missing_policy: str = "ignore",
-        validate_csv: bool = False,
-        gather_row_order: str = "value",
-        dedup_elision: bool = True,
-        dedup_elision_probe_bytes: int = 4 << 30,
-        narrow_dedup_min_bytes: int = 48 << 20,
+        options: Options | None = None,
+        **opts,
     ) -> None:
+        """``options`` and/or keyword overrides named after its fields
+        (an unknown name raises TypeError)."""
         self.spark = spark
         self.tms = triples_maps
         self.tm_by_id = {tm.tm_id: tm for tm in triples_maps}
         self.base = base
-        self.remove_duplicates = remove_duplicates
-        self.infer_datatypes = infer_datatypes
-        self.dedup_scope = dedup_scope
+        self.opts = replace(options or Options(), **opts)
         # "reference" scope needs each triple tagged with its originating
         # object-map rule value (the PTT table key component)
-        self.track_rules = dedup_scope == "reference"
-        # input dedup (reference: CSV drop_duplicates at semantify.py:10234,
-        # SELECT DISTINCT projection for DB sources, functions.py:211-288):
-        # scan-level duplicate elimination before any term is computed
-        self.input_dedup = input_dedup
-        # missing-attribute policy (reference: functions.py:1915-1920 with
-        # the global ignore="yes" default, semantify.py:75-76): "ignore"
-        # drops the affected POM/TM with a warning, "abort" raises a
-        # MappingError naming the attribute and TriplesMap
-        self.missing_policy = missing_policy
-        # CSV schema validation (reference valid_source,
-        # functions.py:41-50): FAILFAST aborts on ragged/malformed rows
-        self.validate_csv = validate_csv
-        # grouped-gather item order: "value" (deterministic sort, RML-CC
-        # leaves cross-row order undefined) or "source" (reference
-        # source-row order, cc_functions.py:269-340)
-        self.gather_row_order = gather_row_order
-        # dedup elision: skip the global distinct for TriplesMaps that
-        # PROVABLY emit duplicate-free triples (see compile_all). The
-        # proof includes a bounded driver-side uniqueness probe of the
-        # subject key columns, capped at dedup_elision_probe_bytes of
-        # source data (at real scale the probe is a column scan — still
-        # far cheaper than the full-output shuffle it removes, but the
-        # cap keeps compile time predictable; raise it deliberately)
-        self.dedup_elision = dedup_elision
-        self.dedup_elision_probe_bytes = dedup_elision_probe_bytes
-        # narrow dedup only pays off once the rendered-triple distinct is
-        # shuffle-bound: the layered post-shuffle re-render has a fixed
-        # per-query cost that a small input never amortizes (sf0.1 bench:
-        # 5.4 s direct vs 7.4 s narrow; sf1+: narrow wins and the gap
-        # widens superlinearly). Below this source size keep the direct
-        # rendered-distinct plan.
-        self.narrow_dedup_min_bytes = narrow_dedup_min_bytes
+        self.track_rules = self.opts.dedup_scope == "reference"
         # RML-IO logical targets: emit a static array<string> __targets
         # column naming the targets each triple routes to (the reference
         # re-runs the whole TM per target file, semantify.py:10013-10088 —
@@ -416,27 +396,21 @@ class MappingPlanner:
         key = tm.source.cache_key()
         if key not in self._scan_cache:
             ls = tm.source
-            if self.validate_csv and ls.fmt in ("csv", "tsv"):
-                from dataclasses import replace
-
+            if self.opts.validate_csv and ls.fmt in ("csv", "tsv"):
                 ls = replace(ls, options={**ls.options, "mode": "FAILFAST"})
             if ls.fmt == "xml":
                 prefs = self._xml_parent_refs(key)
                 if prefs:
-                    from dataclasses import replace
-
                     ls = replace(ls, options={
                         **ls.options, "xml_parent_refs": "\x1f".join(prefs)})
-            if ls.fmt == "json" and not self.input_dedup:
+            if ls.fmt == "json" and not self.opts.input_dedup:
                 df = self._json_scan(ls)
-            elif self.input_dedup:
+            elif self.opts.input_dedup:
                 if ls.fmt in ("sql", "jdbc") and ls.table and not ls.query:
                     # DB-side SELECT DISTINCT over only the mapped columns
                     # (the reference's translate_sql, functions.py:211-288)
                     cols = self._source_columns(key)
                     if cols is not None:
-                        from dataclasses import replace
-
                         from ..sources import projection_query
 
                         ls = replace(ls, query=projection_query(
@@ -465,13 +439,12 @@ class MappingPlanner:
     # (pre-iterator) so every branch reads blocks. Fresh per planner —
     # never persisted across materialize() calls, so every bench/oracle
     # invocation still computes from the raw inputs. Above the gate
-    # (SDM_JSON_CKPT_MAX_MB, default 512) the streaming-scan behavior is
-    # unchanged — at warehouse scale a document that big should be JSONL
-    # feeding the splittable line path, not a checkpoint.
+    # (JSON_CKPT_MAX_BYTES) the streaming-scan behavior is unchanged —
+    # at warehouse scale a document that big should be JSONL feeding the
+    # splittable line path, not a checkpoint.
     def _json_scan(self, ls) -> "DataFrame":
         from ..sources import (
-            _stage_remote, apply_json_iterator, json_base, source_bytes,
-            staged_path)
+            _stage_remote, apply_json_iterator, json_base, staged_path)
 
         # remote (HTTP) documents stage to a local file first, exactly as
         # read_source does — spark.read.json cannot list an http:// path
@@ -490,9 +463,8 @@ class MappingPlanner:
                 self._fusion.get(t.tm_id, t.tm_id) for t in self.tms
                 if t.source.fmt == "json"
                 and staged_path(str(t.source.source)) == src})
-            gate_mb = int(os.environ.get("SDM_JSON_CKPT_MAX_MB", "512"))
             nbytes = source_bytes(src)
-            if n_readers > 1 and 0 <= nbytes <= gate_mb * (1 << 20):
+            if n_readers > 1 and 0 <= nbytes <= JSON_CKPT_MAX_BYTES:
                 base = base.localCheckpoint(eager=True)
             self._scan_cache[bkey] = base
         return apply_json_iterator(base, ls.iterator)
@@ -714,8 +686,8 @@ class MappingPlanner:
                 schema += ", __rule string"
             return self.spark.createDataFrame([], schema)
 
-        if (self.remove_duplicates and not self.collect_targets
-                and self.dedup_elision and self.dedup_scope == "spog"
+        if (self.opts.remove_duplicates and not self.collect_targets
+                and self.opts.dedup_elision and self.opts.dedup_scope == "spog"
                 and self._cross_tm_disjoint([tm for tm, _ in parts_by_tm])):
             # dedup elision: when no two TriplesMaps can emit the same
             # triple (disjoint predicate/class constants), the global
@@ -770,7 +742,7 @@ class MappingPlanner:
         parts = [df for df, _ in
                  self._fuse_units([(p, False) for _, p in parts_by_tm])]
         out = reduce(DataFrame.union, parts)
-        if self.remove_duplicates and not self.collect_targets:
+        if self.opts.remove_duplicates and not self.collect_targets:
             # with target tracking the caller dedups per output (the
             # target column would otherwise make equal triples distinct).
             # dedup_scope "spo" collapses the same triple across named
@@ -782,7 +754,7 @@ class MappingPlanner:
             # DIFFERENT object-map rules survives twice — and the graph
             # term never participates (which graph survives a collapse is
             # first-encountered in the reference; arbitrary here).
-            out = dedup_triples(out, self.dedup_scope)
+            out = dedup_triples(out, self.opts.dedup_scope)
         if self.track_rules and not self.collect_targets:
             out = out.drop("__rule")
         return out
@@ -972,7 +944,7 @@ class MappingPlanner:
         refs = self._subject_static_refs(tm)
         if refs is None:
             return None
-        if self._source_bytes(tm.source) < self.narrow_dedup_min_bytes:
+        if source_bytes(tm.source.source) < NARROW_DEDUP_MIN_BYTES:
             # small input: the rendered distinct's hash aggregate stays
             # in memory, so the narrow tier's layered re-render is pure
             # overhead — keep the direct plan (size gate, judge r5)
@@ -992,19 +964,6 @@ class MappingPlanner:
         if not self._subject_value_injective(tm.source, sorted(set(refs))):
             return None
         return refs
-
-    @staticmethod
-    def _source_bytes(ls) -> int:
-        """Total on-disk bytes of a file-backed logical source (0 when
-        unknown — non-file sources, missing paths)."""
-        import glob as _glob
-
-        try:
-            paths = _glob.glob(ls.source) or [ls.source]
-            return sum(os.path.getsize(p) for p in paths
-                       if os.path.isfile(p))
-        except OSError:
-            return 0
 
     def _pom_emits_once_per_row(self, tm, pom) -> bool:
         """True when the POM contributes at most ONE triple per source
@@ -1038,7 +997,7 @@ class MappingPlanner:
         """Driver-side DuckDB check that the subject's reference columns
         are composite-unique among NULL-ish-free rows, and (for string
         sources) injective under rendering (no float-looking values, no
-        '%'). Bounded by dedup_elision_probe_bytes; any failure ⇒ no
+        '%'). Bounded by DEDUP_ELISION_PROBE_BYTES; any failure ⇒ no
         elision. Cached MODULE-wide keyed on the files' (path, mtime,
         size) so repeated materialize() calls in one process don't
         re-scan a large source per compile."""
@@ -1089,7 +1048,7 @@ class MappingPlanner:
             rel = _duck_probe_rel(ls)
             if rel is None:
                 return False
-            if ls.fmt == "json" and total > self.dedup_elision_probe_bytes:
+            if ls.fmt == "json" and total > DEDUP_ELISION_PROBE_BYTES:
                 # JSON probe relations use sample_size=-1 (full-file
                 # type inference, see _duck_probe_rel) so even DESCRIBE
                 # is a full parse — bound it like any other full read
@@ -1106,7 +1065,7 @@ class MappingPlanner:
                 # row really is an int — mixed columns widen to
                 # JSON/VARCHAR and fall out of this branch.
                 return True
-            if total > self.dedup_elision_probe_bytes:
+            if total > DEDUP_ELISION_PROBE_BYTES:
                 return False
             conds, checks = [], []
             for r, t in zip(refs, types):
@@ -1151,7 +1110,7 @@ class MappingPlanner:
                 if not os.path.isfile(p):
                     return False
                 total += os.path.getsize(p)
-            if total > self.dedup_elision_probe_bytes:
+            if total > DEDUP_ELISION_PROBE_BYTES:
                 return False
             cols = ", ".join(f'"{r}"' for r in refs)
             rel = _duck_probe_rel(ls)
@@ -1258,7 +1217,7 @@ class MappingPlanner:
             msg = (f"attribute(s) {sorted(set(miss))} referenced by the "
                    f"subject map of {tm.tm_id} are missing from its logical "
                    f"source {tm.source.source!r}")
-            if self.missing_policy == "abort":
+            if self.opts.missing_policy == "abort":
                 raise MappingError(msg)
             import warnings
 
@@ -1283,7 +1242,8 @@ class MappingPlanner:
                                      layers=layers)
         else:
             subj = compile_term_map(df, subject_term, "subject",
-                                    base=self.base, infer_datatypes=self.infer_datatypes,
+                                    base=self.base,
+                                    infer_datatypes=self.opts.infer_datatypes,
                                     func_maps=tm.func_maps, layers=layers)
         graphs = self._graph_exprs(df, tm.subject.graphs, layers)
 
@@ -1314,7 +1274,7 @@ class MappingPlanner:
                 msg = (f"attribute(s) {sorted(set(miss))} referenced by a "
                        f"predicateObjectMap of {tm.tm_id} are missing from "
                        f"its logical source {tm.source.source!r}")
-                if self.missing_policy == "abort":
+                if self.opts.missing_policy == "abort":
                     raise MappingError(msg)
                 import warnings
 
@@ -1364,7 +1324,7 @@ class MappingPlanner:
                     df, gsub.expr, gsub.valid, F.lit(None).cast("string"),
                     graph, tm.subject.term.gather, base=self.base,
                     as_subject=True, parent_items=self._gather_parent_items(),
-                    row_order=self.gather_row_order,
+                    row_order=self.opts.gather_row_order,
                 )
                 if self.collect_targets:
                     gdf = gdf.withColumn(
@@ -1533,7 +1493,7 @@ class MappingPlanner:
         post_layers = ExprLayers()
         subj = compile_term_map(exploded, subject_term, "subject",
                                 base=self.base,
-                                infer_datatypes=self.infer_datatypes,
+                                infer_datatypes=self.opts.infer_datatypes,
                                 func_maps=tm.func_maps, layers=post_layers)
         exploded = post_layers.apply(exploded)
         p_arr = F.array(*[p for p, *_ in norm])
@@ -1601,7 +1561,7 @@ class MappingPlanner:
                     df, subj.expr, subj.valid & pred.valid, pred.expr, graph,
                     om.gather, base=self.base, node_term=node_term,
                     parent_items=self._gather_parent_items(),
-                    row_order=self.gather_row_order,
+                    row_order=self.opts.gather_row_order,
                 )
                 for graph in ggraphs
             ]
@@ -1623,7 +1583,7 @@ class MappingPlanner:
         tgs = _tset(tm.subject.term, pom.predicate, om, *(pom.graphs or []))
         if om.kind in (TEMPLATE, REFERENCE, CONSTANT, FUNCTION):
             obj = compile_term_map(df, om, "object", base=self.base,
-                                   infer_datatypes=self.infer_datatypes,
+                                   infer_datatypes=self.opts.infer_datatypes,
                                    func_maps=tm.func_maps, layers=layers)
             osplit = ((obj.core, obj.suffix)
                       if obj.suffix is not None else None)
@@ -1846,7 +1806,7 @@ class MappingPlanner:
                                    layers=layers)
         else:
             obj = compile_term_map(df, om, "object", base=self.base,
-                                   infer_datatypes=self.infer_datatypes,
+                                   infer_datatypes=self.opts.infer_datatypes,
                                    func_maps=qtm.func_maps, layers=layers)
         expr = F.concat(F.lit("<< "), subj.expr, F.lit(" "), pred.expr,
                         F.lit(" "), obj.expr, F.lit(" >>"))

@@ -18,9 +18,9 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .compiler.plan import MappingPlanner
-from .config import RunConfig, load_config
-from .rml_parser import parse_mapping, parse_mapping_file
+from .compiler.plan import MappingPlanner, dedup_triples
+from .config import Options, RunConfig, load_config
+from .rml_parser import extract_logical_targets, extract_triples_maps
 from .sinks import to_turtle, write_ntriples, write_turtle
 from .turtle import parse as parse_turtle
 
@@ -30,7 +30,13 @@ from .turtle import parse as parse_turtle
 TURTLE_DRIVER_MAX_ROWS = 100_000
 
 
-def _write_turtle_out(triples, out: str) -> None:
+def _write_out(triples, folder: str, name: str, output_format: str) -> None:
+    """Write one output file, ``<folder>/<name>.ttl`` or ``.nt``."""
+    if output_format not in ("turtle", "ttl"):
+        write_ntriples(triples, os.path.join(folder, name + ".nt"),
+                       single_file=True)
+        return
+    out = os.path.join(folder, name + ".ttl")
     if triples.limit(TURTLE_DRIVER_MAX_ROWS + 1).count() > TURTLE_DRIVER_MAX_ROWS:
         write_turtle(triples, out, single_file=True)
     else:
@@ -63,20 +69,12 @@ def tune_session(spark: SparkSession) -> SparkSession:
     (new resolver + legacy fixed-point + comparison) on every plan; with
     the wide expression trees a compiled mapping produces, that costs tens
     of seconds per query — disable it and keep the legacy analyzer.
-
-    ``SPARK_GRAFT_SKIP_TUNE_KEYS`` (comma-separated conf keys) skips
-    individual settings — the A/B diagnostic hatch for attributing a
-    perf delta to one engine-wide knob in a fresh JVM (judge r8 ask #1);
-    never set in production.
     """
-    skip = {s for s in
-            os.environ.get("SPARK_GRAFT_SKIP_TUNE_KEYS", "").split(",") if s}
     # idempotent per session: callers invoke this defensively (every
     # read_parquet, every stream build) and each conf.set is a py4j
     # round trip — skip the ~10 of them when this session already ran
-    # with the same skip-set (r10; the set is tiny but per-query-build)
-    token = ("sdm_tuned", tuple(sorted(skip)))
-    if getattr(spark, "_sdm_tuned", None) == token:
+    # (r10; the set is tiny but per-query-build)
+    if getattr(spark, "_sdm_tuned", False):
         return spark
     for k, v in {
         "spark.sql.analyzer.singlePassResolver.enabled": "false",
@@ -135,13 +133,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning":
             "true",
     }.items():
-        if k in skip:
-            continue
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
-    spark._sdm_tuned = token
+    spark._sdm_tuned = True
     return spark
 
 
@@ -162,39 +158,37 @@ def default_session(app: str = "sdm-rdfizer-spark", cpus: str | int = "*",
     )
 
 
+def plan_mapping(spark: SparkSession, mapping_text: str,
+                 base_dir: str | None, options: Options | None = None, *,
+                 planner_cls=MappingPlanner, with_targets: bool = False,
+                 **opts):
+    """Parse an RML mapping document and build its planner — the prelude
+    every materialize entry point shares. Returns ``(planner, targets)``;
+    ``targets`` (``{id: LogicalTarget}``) is read only when
+    ``with_targets``, and turns on the planner's target tagging."""
+    tune_session(spark)
+    g = parse_turtle(mapping_text)
+    tms = extract_triples_maps(g, base_dir)
+    targets = extract_logical_targets(g, base_dir) if with_targets else {}
+    planner = planner_cls(spark, tms, base=g.base,
+                          collect_targets=bool(targets), options=options,
+                          **opts)
+    return planner, targets
+
+
 def materialize(
     spark: SparkSession,
     mapping_text: str,
     *,
     base_dir: str | None = None,
-    remove_duplicates: bool = True,
-    infer_datatypes: bool = False,
-    input_dedup: bool = False,
-    missing_policy: str = "ignore",
-    validate_csv: bool = False,
-    gather_row_order: str = "value",
-    dedup_scope: str = "spog",
-    dedup_elision: bool = True,
-    narrow_dedup_min_bytes: int = 48 << 20,
+    options: Options | None = None,
+    **opts,
 ) -> DataFrame:
-    """Compile an RML mapping document into its triples DataFrame."""
-    tune_session(spark)
-    g = parse_turtle(mapping_text)
-    from .rml_parser import extract_triples_maps
+    """Compile an RML mapping document into its triples DataFrame.
 
-    tms = extract_triples_maps(g, base_dir)
-    planner = MappingPlanner(
-        spark, tms, base=g.base,
-        remove_duplicates=remove_duplicates,
-        infer_datatypes=infer_datatypes,
-        input_dedup=input_dedup,
-        missing_policy=missing_policy,
-        validate_csv=validate_csv,
-        gather_row_order=gather_row_order,
-        dedup_scope=dedup_scope,
-        dedup_elision=dedup_elision,
-        narrow_dedup_min_bytes=narrow_dedup_min_bytes,
-    )
+    Settings come from ``options`` and/or keyword overrides named after
+    its fields (``remove_duplicates=False``, ``dedup_scope="spo"``, …)."""
+    planner, _ = plan_mapping(spark, mapping_text, base_dir, options, **opts)
     return planner.compile_all()
 
 
@@ -203,14 +197,8 @@ def materialize_with_targets(
     mapping_text: str,
     *,
     base_dir: str | None = None,
-    remove_duplicates: bool = True,
-    infer_datatypes: bool = False,
-    input_dedup: bool = False,
-    missing_policy: str = "ignore",
-    validate_csv: bool = False,
-    gather_row_order: str = "value",
-    dedup_scope: str = "spog",
-    dedup_elision: bool = True,
+    options: Options | None = None,
+    **opts,
 ):
     """Compile a mapping with RML-IO logical targets.
 
@@ -218,36 +206,20 @@ def materialize_with_targets(
     ``{LogicalTarget: DataFrame}`` of the per-target subsets. One tagged
     compilation pass feeds every output — the reference instead re-runs
     the whole TriplesMap once per target file (semantify.py:10013-10088).
+    Settings as for ``materialize``.
     """
-    from .rml_parser import extract_logical_targets, extract_triples_maps
-
-    tune_session(spark)
-    g = parse_turtle(mapping_text)
-    tms = extract_triples_maps(g, base_dir)
-    targets = extract_logical_targets(g, base_dir)
-    planner = MappingPlanner(
-        spark, tms, base=g.base,
-        remove_duplicates=remove_duplicates,
-        infer_datatypes=infer_datatypes,
-        collect_targets=bool(targets),
-        input_dedup=input_dedup,
-        missing_policy=missing_policy,
-        validate_csv=validate_csv,
-        gather_row_order=gather_row_order,
-        dedup_scope=dedup_scope,
-        dedup_elision=dedup_elision,
-    )
+    planner, targets = plan_mapping(spark, mapping_text, base_dir, options,
+                                    with_targets=True, **opts)
     raw = planner.compile_all()
     if not targets:
         return raw, {}
-    from .compiler.plan import dedup_triples
 
-    if len(targets) > 1 or any(tm.poms for tm in tms):
+    if len(targets) > 1 or any(tm.poms for tm in planner.tms):
         raw = raw.persist()
 
     def finish(df):
-        if remove_duplicates:
-            df = dedup_triples(df, dedup_scope)
+        if planner.opts.remove_duplicates:
+            df = dedup_triples(df, planner.opts.dedup_scope)
         return df.drop("__rule") if planner.track_rules else df
 
     main = finish(raw.drop("__targets"))
@@ -271,14 +243,7 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
         triples, target_frames = materialize_with_targets(
             spark, text,
             base_dir=os.path.dirname(os.path.abspath(ds.mapping_path)),
-            remove_duplicates=cfg.remove_duplicates,
-            infer_datatypes=cfg.infer_datatypes,
-            input_dedup=cfg.input_dedup,
-            missing_policy=cfg.missing_policy,
-            validate_csv=cfg.validate_csv,
-            gather_row_order=cfg.gather_row_order,
-            dedup_scope=cfg.dedup_scope,
-            dedup_elision=cfg.dedup_elision,
+            options=cfg,
         )
         results[ds.name] = triples
         if target_frames:
@@ -305,12 +270,7 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
                 write_target(frame, spec)
 
         if not cfg.all_in_one_file:
-            if cfg.output_format in ("turtle", "ttl"):
-                out = os.path.join(cfg.output_folder, ds.name + ".ttl")
-                _write_turtle_out(triples, out)
-            else:
-                out = os.path.join(cfg.output_folder, ds.name + ".nt")
-                write_ntriples(triples, out, single_file=True)
+            _write_out(triples, cfg.output_folder, ds.name, cfg.output_format)
 
     if cfg.all_in_one_file and results:
         # reference: every dataset appended into one output file
@@ -319,14 +279,12 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
         for df in results.values():
             merged = df if merged is None else merged.unionByName(df)
         if cfg.remove_duplicates:
-            merged = merged.dropDuplicates(["s", "p", "o", "g"])
-        if cfg.output_format in ("turtle", "ttl"):
-            _write_turtle_out(merged,
-                              os.path.join(cfg.output_folder, "output.ttl"))
-        else:
-            write_ntriples(merged,
-                           os.path.join(cfg.output_folder, "output.nt"),
-                           single_file=True)
+            # key the cross-dataset merge like each dataset's own dedup:
+            # "spo" collapses across graphs here too; "reference" keys on
+            # the whole quad, because __rule is already dropped per dataset
+            merged = dedup_triples(
+                merged, "spo" if cfg.dedup_scope == "spo" else "spog")
+        _write_out(merged, cfg.output_folder, "output", cfg.output_format)
     return results
 
 

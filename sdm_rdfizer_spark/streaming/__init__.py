@@ -21,12 +21,14 @@ from __future__ import annotations
 
 import os
 import time
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compiler.plan import MappingPlanner
-from ..engine import scoped_conf
+from ..config import Options
+from ..engine import plan_mapping, scoped_conf
 from ..ir import LogicalSource, TriplesMap
 from ..sources import read_parquet, read_source
 
@@ -77,12 +79,16 @@ def stream_scan(spark: SparkSession, ls: LogicalSource) -> DataFrame:
 class StreamingMappingPlanner(MappingPlanner):
     """Same compilation, streaming driving scans, static join builds."""
 
-    def __init__(self, *args, **kwargs) -> None:
+    def __init__(self, spark: SparkSession, triples_maps: list[TriplesMap],
+                 *, base: str | None = None, collect_targets: bool = False,
+                 options: Options | None = None, **opts) -> None:
         # dedup elision is proof-by-probe of the CURRENT source files; a
         # stream can later deliver files that repeat a subject key, so
         # the proof cannot hold stream-wide — keep the stateful dedup
-        kwargs["dedup_elision"] = False
-        super().__init__(*args, **kwargs)
+        options = replace(options or Options(), **opts)
+        super().__init__(spark, triples_maps, base=base,
+                         collect_targets=collect_targets,
+                         options=replace(options, dedup_elision=False))
 
     def compile_tm(self, tm: TriplesMap,
                    narrow_refs: list[str] | None = None) -> DataFrame:
@@ -126,30 +132,22 @@ def materialize_stream(
     mapping_text: str,
     *,
     base_dir: str | None = None,
-    remove_duplicates: bool = False,
-    infer_datatypes: bool = False,
+    options: Options | None = None,
+    **opts,
 ) -> DataFrame:
     """Compile an RML mapping into a **streaming** triples DataFrame.
 
-    ``remove_duplicates`` defaults off: on a stream it is stateful
-    (unbounded dedup state, the price of the reference's global PTT
-    semantics in a never-ending job). Leave it off and dedup per
-    micro-batch downstream, or bound state with
-    ``dropDuplicatesWithinWatermark`` after attaching an event-time
-    column, when the source has one.
+    Settings as for ``materialize``, except that ``remove_duplicates``
+    defaults off: on a stream it is stateful (unbounded dedup state, the
+    price of the reference's global PTT semantics in a never-ending
+    job). Leave it off and dedup per micro-batch downstream, or bound
+    state with ``dropDuplicatesWithinWatermark`` after attaching an
+    event-time column, when the source has one.
     """
-    from ..engine import tune_session
-    from ..rml_parser import extract_triples_maps
-    from ..turtle import parse as parse_turtle
-
-    tune_session(spark)
-    g = parse_turtle(mapping_text)
-    tms = extract_triples_maps(g, base_dir)
-    planner = StreamingMappingPlanner(
-        spark, tms, base=g.base,
-        remove_duplicates=remove_duplicates,
-        infer_datatypes=infer_datatypes,
-    )
+    planner, _ = plan_mapping(
+        spark, mapping_text, base_dir,
+        options or Options(remove_duplicates=False),
+        planner_cls=StreamingMappingPlanner, **opts)
     return planner.compile_all()
 
 

@@ -165,45 +165,61 @@ def test_materialize_incremental_emits_only_delta(spark, tmp_path):
 
 def test_multi_dataset_all_in_one_file(spark, tmp_path):
     """number_of_datasets=2 + all_in_one_file: union of both datasets,
-    cross-dataset duplicates collapsed, one output.nt."""
-    (tmp_path / "a.csv").write_text("id,v\n1,x\n")
-    (tmp_path / "b.csv").write_text("id,v\n1,x\n2,y\n")  # row 1 duplicates ds1
-    for name, src in (("m1.ttl", "a.csv"), ("m2.ttl", "b.csv")):
-        (tmp_path / name).write_text(f"""
+    cross-dataset duplicates collapsed, one output.nt. With
+    dedup_scope=spo the merge collapses the same triple across graphs,
+    as each dataset's own dedup does."""
+    from sdm_rdfizer_spark import semantify
+
+    for scope, graphs in (("spog", ("", "")),
+                          ("spo", ("; rr:graph ex:g1", "; rr:graph ex:g2"))):
+        d = tmp_path / scope
+        d.mkdir()
+        (d / "a.csv").write_text("id,v\n1,x\n")
+        (d / "b.csv").write_text("id,v\n1,x\n2,y\n")  # row 1 duplicates ds1
+        for name, src, graph in (("m1.ttl", "a.csv", graphs[0]),
+                                 ("m2.ttl", "b.csv", graphs[1])):
+            (d / name).write_text(f"""
 @prefix rr: <http://www.w3.org/ns/r2rml#> .
 @prefix rml: <http://semweb.mmlab.be/ns/rml#> .
 @prefix ql: <http://semweb.mmlab.be/ns/ql#> .
 @prefix ex: <http://x.org/> .
 <#M> a rr:TriplesMap;
-  rml:logicalSource [ rml:source "{tmp_path}/{src}"; rml:referenceFormulation ql:CSV ];
-  rr:subjectMap [ rr:template "http://x.org/{{id}}" ];
+  rml:logicalSource [ rml:source "{d}/{src}"; rml:referenceFormulation ql:CSV ];
+  rr:subjectMap [ rr:template "http://x.org/{{id}}"{graph} ];
   rr:predicateObjectMap [ rr:predicate ex:v; rr:objectMap [ rml:reference "v" ] ] .
 """)
-    cfg = tmp_path / "config.ini"
-    cfg.write_text(f"""[datasets]
+        cfg = d / "config.ini"
+        cfg.write_text(f"""[datasets]
 number_of_datasets: 2
-output_folder: {tmp_path}/out
+output_folder: {d}/out
 all_in_one_file: yes
 remove_duplicate: yes
+dedup_scope: {scope}
 name: combined
 
 [dataset1]
 name: d1
-mapping: {tmp_path}/m1.ttl
+mapping: {d}/m1.ttl
 
 [dataset2]
 name: d2
-mapping: {tmp_path}/m2.ttl
+mapping: {d}/m2.ttl
 """)
-    from sdm_rdfizer_spark import semantify
-
-    results = semantify(str(cfg), spark)
-    assert set(results) == {"d1", "d2"}
-    out = (tmp_path / "out" / "output.nt").read_text().splitlines()
-    assert sorted(out) == [
-        '<http://x.org/1> <http://x.org/v> "x" .',
-        '<http://x.org/2> <http://x.org/v> "y" .',
-    ]
+        results = semantify(str(cfg), spark)
+        assert set(results) == {"d1", "d2"}
+        out = (d / "out" / "output.nt").read_text().splitlines()
+        if scope == "spog":
+            assert sorted(out) == [
+                '<http://x.org/1> <http://x.org/v> "x" .',
+                '<http://x.org/2> <http://x.org/v> "y" .',
+            ]
+        else:
+            # which graph the collapsed triple keeps is arbitrary
+            assert len(out) == 2, out
+            assert sum(line.startswith('<http://x.org/1> <http://x.org/v> "x" ')
+                       for line in out) == 1, out
+            assert '<http://x.org/2> <http://x.org/v> "y" <http://x.org/g2> .' \
+                in out
 
 
 def test_glob_csv_source_reads_all_shards(spark, tmp_path):
