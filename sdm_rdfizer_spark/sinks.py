@@ -15,13 +15,12 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def ntriples_lines(triples: DataFrame) -> DataFrame:
-    """Render (s,p,o[,g]) to one N-Triples/N-Quads line per row."""
-    cols = triples.columns
+def _line(cols) -> Column:
+    """One N-Triples/N-Quads line from the (s,p,o[,g]) columns."""
     if "g" in cols:
         line = F.when(
             F.col("g").isNotNull(),
@@ -29,7 +28,27 @@ def ntriples_lines(triples: DataFrame) -> DataFrame:
         ).otherwise(F.concat_ws(" ", "s", "p", "o"))
     else:
         line = F.concat_ws(" ", "s", "p", "o")
-    return triples.select(F.concat(line, F.lit(" .")).alias("value"))
+    return F.concat(line, F.lit(" ."))
+
+
+def ntriples_lines(triples: DataFrame) -> DataFrame:
+    """Render (s,p,o[,g]) to one N-Triples/N-Quads line per row."""
+    return triples.select(_line(triples.columns).alias("value"))
+
+
+def _single_file(lines: DataFrame, path: str,
+                 compression: str | None = None) -> str:
+    """Write a one-column text frame as the single file ``path``:
+    coalesced into one part file, which then moves to ``path``."""
+    tmp = path + "._spark_tmp"
+    writer = lines.coalesce(1).write.mode("overwrite")
+    if compression:
+        writer = writer.option("compression", compression)
+    writer.text(tmp)
+    part = glob.glob(os.path.join(tmp, "part-*"))[0]
+    shutil.move(part, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def write_ntriples(
@@ -58,15 +77,8 @@ def write_ntriples(
         # strip <>; Spark Hive-escapes unsafe chars (/ : …) in partition
         # directory names itself
         pdir = F.regexp_replace("p", "^<|>$", "")
-        if "g" in triples.columns:
-            lexpr = F.when(F.col("g").isNotNull(),
-                           F.concat_ws(" ", "s", "p", "o", "g")
-                           ).otherwise(F.concat_ws(" ", "s", "p", "o"))
-        else:
-            lexpr = F.concat_ws(" ", "s", "p", "o")
-        out = triples.select(
-            pdir.alias("pred"),
-            F.concat(lexpr, F.lit(" .")).alias("value"))
+        out = triples.select(pdir.alias("pred"),
+                             _line(triples.columns).alias("value"))
         writer = out.write.mode("overwrite").partitionBy("pred")
         if compression:
             writer = writer.option("compression", compression)
@@ -74,15 +86,7 @@ def write_ntriples(
         return path
     lines = ntriples_lines(triples)
     if single_file:
-        tmp = path + "._spark_tmp"
-        writer = lines.coalesce(1).write.mode("overwrite")
-        if compression:
-            writer = writer.option("compression", compression)
-        writer.text(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*"))[0]
-        shutil.move(part, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return path
+        return _single_file(lines, path, compression)
     writer = lines.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
@@ -178,12 +182,7 @@ def write_turtle(
         .mapInPandas(render, "value string")
     )
     if single_file:
-        tmp = path + "._spark_tmp"
-        lines.coalesce(1).write.mode("overwrite").text(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*"))[0]
-        shutil.move(part, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return path
+        return _single_file(lines, path)
     lines.write.mode("overwrite").text(path)
     return path
 
@@ -201,15 +200,7 @@ def to_turtle(triples: DataFrame, prefixes: dict[str, str] | None = None, limit:
     by_subject: dict[str, dict[str, list[str]]] = {}
     for r in rows:
         by_subject.setdefault(r["s"], {}).setdefault(r["p"], []).append(r["o"])
-
-    def shorten(term: str) -> str:
-        if term.startswith("<") and term.endswith(">"):
-            iri = term[1:-1]
-            for pfx, ns in prefixes.items():
-                if iri.startswith(ns) and "/" not in iri[len(ns):] and "#" not in iri[len(ns):]:
-                    return f"{pfx}:{iri[len(ns):]}"
-        return term
-
+    shorten = _shorten_factory(prefixes)
     out = []
     for pfx, ns in sorted(prefixes.items()):
         out.append(f"@prefix {pfx}: <{ns}> .")

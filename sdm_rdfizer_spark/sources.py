@@ -55,6 +55,100 @@ def _stage_remote(source: str) -> str:
     return dest
 
 
+# ---------------------------------------------------------------------------
+# The one file listing: every size gate, partition count and memo key
+# ---------------------------------------------------------------------------
+
+def file_stats(source) -> tuple | None:
+    """``((path, mtime_ns, size), ...)`` for the local files behind a
+    source: the path itself if it exists, else its glob matches; a
+    directory among them adds every file under it (recursive), skipping
+    names that start with ``_`` or ``.`` like Spark's file index
+    (``_SUCCESS``, ``.crc``). ``file://`` unwraps and a staged
+    http(s) URL lists its staging file (``staged_path``). None when the
+    source cannot be listed: another URI scheme, an unstaged URL, a
+    missing path, an ``OSError``."""
+    if not source:
+        return None
+    path = staged_path(str(source))
+    if "://" in path:
+        return None
+    try:
+        if os.path.exists(path):
+            roots = [path]
+        else:
+            import glob as _glob
+
+            roots = _glob.glob(path)
+            if not roots:
+                return None
+        paths = []
+        for root in roots:
+            if not os.path.isdir(root):
+                paths.append(root)
+                continue
+            for top, dirs, files in os.walk(root):
+                dirs[:] = [d for d in dirs if d[0] not in "_."]
+                paths += [os.path.join(top, f)
+                          for f in files if f[0] not in "_."]
+        out = []
+        for p in sorted(paths):
+            st = os.stat(p)
+            out.append((p, st.st_mtime_ns, st.st_size))
+        return tuple(out)
+    except OSError:
+        return None
+
+
+def source_bytes(source) -> int | None:
+    """Total bytes of ``file_stats(source)``; None when it is unknown."""
+    stats = file_stats(source)
+    return None if stats is None else sum(size for _, _, size in stats)
+
+
+_MISS = object()
+
+
+def file_memo(cache, tag: str, source, compute, *extra):
+    """``compute()`` memoized in ``cache`` on ``(tag, file_stats(source),
+    *extra)``: a rewritten or touched file re-computes, an unchanged one
+    does not. A source that cannot be listed computes every time."""
+    stats = file_stats(source)
+    if stats is None:
+        return compute()
+    key = (tag, stats, *extra)
+    value = cache.get(key, _MISS)
+    if value is _MISS:          # None is a memoized value too
+        value = cache[key] = compute()
+    return value
+
+
+def _memo_scan(cache, tag: str, source, read, *extra) -> DataFrame:
+    """``read(schema)`` with the inferred schema memoized by
+    ``file_memo``: a miss returns the inferring ``read(None)`` itself,
+    so no call builds the relation twice."""
+    inferred = []
+
+    def infer():
+        inferred.append(read(None))
+        return inferred[0].schema
+
+    schema = file_memo(cache, tag, source, infer, *extra)
+    return inferred[0] if inferred else read(schema)
+
+
+def partitions_for(spark: SparkSession, nbytes: int | None, per_part: int,
+                   floor: int = 1, cap: int | None = None) -> int:
+    """One partition per ``per_part`` bytes (+1), clamped to
+    ``[floor, cap]`` (``cap`` defaults to the core count). An unknown
+    size gives the core count, never a single partition."""
+    par = spark.sparkContext.defaultParallelism
+    if nbytes is None:
+        return par
+    return max(floor, min(par if cap is None else cap,
+                          int(nbytes // per_part) + 1))
+
+
 def read_source(spark: SparkSession, ls: LogicalSource) -> DataFrame:
     fmt = ls.fmt
     if fmt in ("csv", "tsv", "json", "xml", "ntriples", "parquet") and ls.source:
@@ -84,20 +178,15 @@ def read_source(spark: SparkSession, ls: LogicalSource) -> DataFrame:
         for k, v in ls.options.items():
             reader = reader.option(k, v)
         # all-strings header schema is a pure function of the file bytes
-        # + separator: memoize on file stats (see _FILE_META_CACHE) so
-        # repeated builds skip the plan-time header read. header=True
-        # still skips the first line at scan time; the explicit schema
-        # only replaces the driver-side name inference.
-        skey = _stat_key("csv", ls.source)
-        key = (*skey, sep, tuple(sorted(ls.options.items()))) \
-            if skey is not None else None
-        schema = _FILE_META_CACHE.get(key) if key is not None else None
-        if schema is not None:
-            return reader.schema(schema).csv(ls.source)
-        df = reader.csv(ls.source)
-        if key is not None:
-            _FILE_META_CACHE[key] = df.schema
-        return df
+        # + separator: memoized on the listing (file_memo) so repeated
+        # builds skip the plan-time header read. header=True still skips
+        # the first line at scan time; the explicit schema only replaces
+        # the driver-side name inference.
+        return _memo_scan(
+            _FILE_META_CACHE, "csv", ls.source,
+            lambda schema: (reader if schema is None
+                            else reader.schema(schema)).csv(ls.source),
+            sep, tuple(sorted(ls.options.items())))
     if fmt == "parquet":
         return read_parquet(spark, ls.source)
     if fmt == "json":
@@ -337,27 +426,24 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
     Scan METADATA — the Spark-inferred schema, the nanos column list,
     the footer row-group stats — is a pure function of the file bytes,
-    so it is memoized on (path, mtime, size) like the JSON schema cache
-    (guide §1.2: repeated query builds over an unchanged source paid a
-    driver-side footer read + schema fetch per build). A memo hit passes
-    ``.schema(...)`` explicitly, skipping plan-time schema inference;
-    StructType is plain Python, so entries are session-independent. The
-    emitted plan is identical either way (same relation schema).
+    so it is memoized on the listing (``file_memo``) like the JSON
+    schema cache (guide §1.2: repeated query builds over an unchanged
+    source paid a driver-side footer read + schema fetch per build).
+    A memo hit passes ``.schema(...)`` explicitly, skipping plan-time
+    schema inference; StructType is plain Python, so entries are
+    session-independent. The emitted plan is identical either way
+    (same relation schema).
     """
     from .engine import tune_session
 
     tune_session(spark)
-    key = _stat_key("pq", path)
-    meta = _FILE_META_CACHE.get(key) if key is not None else None
-    if meta is not None:
-        schema, ns_cols, (rg, rows) = meta
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        ns_cols = _nanos_timestamp_columns(path)
-        rg, rows = _row_group_stats(path)
-        if key is not None:
-            _FILE_META_CACHE[key] = (df.schema, ns_cols, (rg, rows))
+    df = _memo_scan(_FILE_META_CACHE, "pq", path,
+                    lambda schema: (spark.read if schema is None else
+                                    spark.read.schema(schema)).parquet(path))
+    ns_cols, (rg, rows) = file_memo(
+        _FILE_META_CACHE, "pqmeta", path,
+        lambda: (_nanos_timestamp_columns(path),
+                 _row_group_stats(file_stats(path))))
     for c in ns_cols:
         if c in df.columns and dict(df.dtypes).get(c) == "bigint":
             # integer division — double division loses precision for
@@ -377,41 +463,25 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# scan metadata keyed on file stats (same contract as _JSON_SCHEMA_CACHE):
-# csv/parquet schemas + parquet footer stats re-derive only when the file
-# changes. Glob/multi-file sources get no stat key and skip the memo.
-# Bounded (r11, ADVICE #4): superseded (path, mtime, size) revisions
-# would otherwise accumulate for the process lifetime.
+# scan metadata keyed on the file listing (same contract as
+# _JSON_SCHEMA_CACHE): csv/parquet schemas + parquet footer stats
+# re-derive only when a listed file changes. Bounded (r11, ADVICE #4):
+# superseded listings would otherwise accumulate for the process
+# lifetime.
 _FILE_META_CACHE: dict = BoundedMemo(1024)
 
 
-def _stat_key(tag: str, path) -> tuple | None:
-    try:
-        if not os.path.isfile(path):
-            # directory/glob sources: a contained file can change without
-            # moving the directory mtime — no safe cheap token, no memo
-            return None
-        st = os.stat(path)
-        return (tag, str(path), st.st_mtime_ns, st.st_size)
-    except (OSError, TypeError, ValueError):
-        return None
-
-
-def _row_group_stats(path: str) -> tuple[int, int]:
-    """(row_groups, rows) from parquet footers — driver-side, no Spark job."""
+def _row_group_stats(stats) -> tuple[int, int]:
+    """(row_groups, rows) from the footers of the listed files
+    (``file_stats``) — driver-side, no Spark job."""
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isfile(path):
-            f = pq.ParquetFile(path)
-            return f.num_row_groups, f.metadata.num_rows
-        import glob as _glob
-
         groups = rows = 0
-        for part in _glob.glob(os.path.join(path, "*.parquet")):
-            f = pq.ParquetFile(part)
-            groups += f.num_row_groups
-            rows += f.metadata.num_rows
+        for path, _, _ in stats:
+            meta = pq.ParquetFile(path).metadata
+            groups += meta.num_row_groups
+            rows += meta.num_rows
         return groups, rows
     except Exception:
         return (1 << 30), 0  # unknown layout: leave the scan alone
@@ -439,7 +509,6 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
 # unchanged source (every TM sharing it, repeated bench runs) infer once.
 # Bounded (r11, ADVICE #4) like _FILE_META_CACHE.
 _JSON_SCHEMA_CACHE: dict = BoundedMemo(256)
-_MISS = object()
 
 _JSON_SAMPLE_BYTES = 4 << 20      # total driver-side sample budget
 
@@ -488,34 +557,29 @@ def _sampled_jsonl_schema(spark: SparkSession, source: str):
     drift should export ``SPARK_GRAFT_JSON_SCHEMA=full`` to fall back
     to full inference (a referenced column entirely absent from the
     sample fails loudly at compile, not silently). Returns None when
-    sampling is not worthwhile (small input) or not possible (globs
-    without files)."""
-    import glob as _glob
-
-    paths = sorted(p for p in (_glob.glob(source) or [source])
-                   if os.path.isfile(p))
-    if not paths:
-        return None
-    key = tuple((p, os.stat(p).st_mtime_ns, os.stat(p).st_size)
-                for p in paths)
-    cached = _JSON_SCHEMA_CACHE.get(key, _MISS)
-    if cached is not _MISS:          # None is a cached verdict too
-        return cached
-    total = sum(os.path.getsize(p) for p in paths)
-    if total <= _JSON_SAMPLE_BYTES:
+    sampling is not worthwhile (small input) or not possible (nothing
+    listed, ``file_stats``)."""
+    total = source_bytes(source)
+    if total is None or total <= _JSON_SAMPLE_BYTES:
         # inference over the whole input costs the same as the sample
         return None
+    return file_memo(_JSON_SCHEMA_CACHE, "jsonl", source,
+                     lambda: _jsonl_sample_schema(spark, source))
+
+
+def _jsonl_sample_schema(spark: SparkSession, source: str):
+    """The uncached body of ``_sampled_jsonl_schema``."""
+    files = file_stats(source)
     # at most 16 files, spread across the (sorted) file list so shard
     # sets with per-shard drift still get coverage
-    if len(paths) > 16:
-        step = len(paths) / 16
-        paths = [paths[int(i * step)] for i in range(16)]
-    per_file = _JSON_SAMPLE_BYTES // len(paths)
+    if len(files) > 16:
+        step = len(files) / 16
+        files = [files[int(i * step)] for i in range(16)]
+    per_file = _JSON_SAMPLE_BYTES // len(files)
     max_line = 64 << 20
     n_zones = 8
     lines: list[str] = []
-    for p in paths:
-        size = os.path.getsize(p)
+    for p, _, size in files:
         taken = 0
         with open(p, "rb") as f:
             # zone sampling with seek + readline: COMPLETE lines only,
@@ -553,7 +617,6 @@ def _sampled_jsonl_schema(spark: SparkSession, source: str):
             if last:
                 lines.append(last)
     if not lines:
-        _JSON_SCHEMA_CACHE[key] = None
         return None
     schema = spark.read.json(
         spark.sparkContext.parallelize(lines, 16)).schema
@@ -563,7 +626,6 @@ def _sampled_jsonl_schema(spark: SparkSession, source: str):
         # a sampled line failed to parse — either malformed data or a
         # sampling blind spot; full inference is the safe answer
         schema = None
-    _JSON_SCHEMA_CACHE[key] = schema
     return schema
 
 
@@ -597,41 +659,15 @@ def json_base(spark: SparkSession, source: str) -> DataFrame:
     if not jsonl and os.environ.get("SPARK_GRAFT_JSON_SCHEMA") != "full":
         # multiLine documents cannot be schema-sampled (one root value —
         # the whole file must parse), but the INFERRED schema is a pure
-        # function of the file bytes: memoize it on (path, mtime, size)
-        # like the JSONL sample cache, so every re-scan of an unchanged
+        # function of the file bytes: memoize it on the listing like
+        # the JSONL sample cache, so every re-scan of an unchanged
         # source (each TM sharing it, each materialize() call) pays the
         # inference parse once per process instead of once per compile
-        try:
-            st = os.stat(source)
-            key = ("ml", source, st.st_mtime_ns, st.st_size)
-        except OSError:
-            key = None
-        schema = _JSON_SCHEMA_CACHE.get(key) if key is not None else None
-        if schema is not None:
-            return reader.schema(schema).json(source)
-        df = reader.json(source)
-        if key is not None:
-            _JSON_SCHEMA_CACHE[key] = df.schema
-        return df
+        return _memo_scan(
+            _JSON_SCHEMA_CACHE, "ml", source,
+            lambda schema: (reader if schema is None
+                            else reader.schema(schema)).json(source))
     return reader.json(source)
-
-
-def source_bytes(source: str) -> int:
-    """Total bytes behind a file/glob source path (sizing gates); -1
-    when unknown."""
-    import glob as _glob
-
-    try:
-        if os.path.isfile(source):
-            return os.path.getsize(source)
-        paths = _glob.glob(source)
-        if not paths and os.path.isdir(source):
-            paths = [os.path.join(source, p) for p in os.listdir(source)]
-        if not paths:
-            return -1
-        return sum(os.path.getsize(p) for p in paths if os.path.isfile(p))
-    except OSError:
-        return -1
 
 
 def apply_json_iterator(df: DataFrame, iterator: str | None) -> DataFrame:

@@ -30,7 +30,15 @@ from ..compiler.plan import MappingPlanner
 from ..config import Options
 from ..engine import plan_mapping, scoped_conf
 from ..ir import LogicalSource, TriplesMap
-from ..sources import read_parquet, read_source
+from ..sources import (
+    file_stats, partitions_for, read_parquet, read_source, source_bytes)
+
+#: input bytes per streaming state partition (run_available_now)
+STATE_PARTITION_BYTES = 128 << 10
+
+#: per-trigger input bytes per static shuffle partition
+#: (stream_minhash_verify)
+SHUFFLE_PARTITION_BYTES = 64 << 20
 
 
 def stream_scan(spark: SparkSession, ls: LogicalSource) -> DataFrame:
@@ -180,8 +188,6 @@ def run_available_now(
     pins shuffle partitions to ``defaultParallelism`` (one state
     partition per core — scale-adaptive, no constant) for the
     query's lifetime and restores the session value afterwards.
-    ``SDM_STREAM_STATE_PARTITIONS`` overrides for production jobs
-    whose key volume wants more state shards than cores.
 
     Concurrency note (ADVICE r10 #5): the drain mutates the SESSION
     conf (``spark.sql.shuffle.partitions``) for the query's lifetime —
@@ -193,23 +199,19 @@ def run_available_now(
 
     ``input_bytes`` (r11): when the caller knows the drained input's
     size, small inputs get proportionally fewer state partitions
-    (~128 KB of input per partition, still capped at the core count) —
+    (``STATE_PARTITION_BYTES`` of input per partition, still capped at
+    the core count; ``sources.partitions_for``) —
     every state partition is one task per trigger carrying a state
     store AND, for applyInPandasWithState, one Python worker whose
     per-group state protocol is a round trip, so over-sharding a small
     drain pays pure fixed cost (same-JVM A/B at sf0.1, 2 MB input:
     the sessionize drain's measured optimum is ~16 partitions on 32
     cores, and the driver's own 8-core run was FASTER than 32-core for
-    exactly this reason). Production streams with unbounded key volume
-    should size shards by key count via the env override instead.
+    exactly this reason). An unknown size (None) keeps one state
+    partition per core.
     """
     spark = sdf.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    derived = par
-    if input_bytes is not None and input_bytes >= 0:
-        derived = max(1, min(par, int(input_bytes // (128 << 10)) + 1))
-    state_parts = os.environ.get("SDM_STREAM_STATE_PARTITIONS") or str(
-        derived)
+    state_parts = partitions_for(spark, input_bytes, STATE_PARTITION_BYTES)
     writer = (
         sdf.writeStream.format("memory")
         .queryName(name)
@@ -218,22 +220,11 @@ def run_available_now(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_parts}):
+    with scoped_conf(spark,
+                     {"spark.sql.shuffle.partitions": str(state_parts)}):
         q = writer.start()
         q.awaitTermination()
     return spark.table(name)
-
-
-def _src_bytes(path: str) -> int | None:
-    """Input size for run_available_now's state-partition derivation
-    (file or directory); None when it cannot be cheaply determined."""
-    try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        return sum(os.path.getsize(os.path.join(r, f))
-                   for r, _, fs in os.walk(path) for f in fs)
-    except OSError:
-        return None
 
 
 def windowed_event_stats(
@@ -297,7 +288,7 @@ def stream_events_window(
     # the memory table holds the full aggregation result
     name = "events_window_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(agg, name=name, output_mode="complete",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))
 
 
 def stream_dedup_exact(
@@ -325,7 +316,7 @@ def stream_dedup_exact(
     deduped = sdf.select(*[F.col(c) for c in key_cols]).dropDuplicates(list(key_cols))
     name = "stream_dedup_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(deduped, name=name, output_mode="append",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))
 
 
 def stateful_sessionize_stream(
@@ -492,7 +483,7 @@ def stream_sessionize(
         max_sessions_per_key=max_sessions_per_key)
     name = "sessions_state_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(sessions, name=name, output_mode="append",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))
 
 
 def stream_events_sliding(
@@ -533,7 +524,7 @@ def stream_events_sliding(
     )
     name = "events_sliding_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(agg, name=name, output_mode="complete",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))
 
 
 def stream_minhash_dedup(
@@ -584,7 +575,7 @@ def stream_minhash_dedup(
     deduped = sig.dropDuplicates(["sig"])
     name = "stream_minhash_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(deduped, name=name, output_mode="append",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))
 
 
 def stream_minhash_verify(
@@ -655,12 +646,7 @@ def stream_minhash_verify(
     # invocation) — repeated runs over the same corpus reuse ONE dir,
     # and only the input staging survives between runs
     if work_dir is None:
-        src = os.path.join(sf_dir, "documents.parquet")
-        try:
-            st = os.stat(src)
-            stamp = f"{st.st_mtime_ns}:{st.st_size}"
-        except OSError:
-            stamp = "dir"
+        stamp = file_stats(os.path.join(sf_dir, "documents.parquet"))
         key = hashlib.md5(
             f"{os.path.abspath(sf_dir)}#{n_input_files}#{stamp}".encode()
         ).hexdigest()[:10]
@@ -858,24 +844,18 @@ def stream_minhash_verify(
     # the input text. Floored at 1, capped at 4·cores like
     # tune_session's initialPartitionNum posture; the CPU-heavy hash
     # stage keeps its own explicit repartition(par), so this only sizes
-    # the join/window/aggregate exchanges. SDM_STREAM_SHUFFLE_TARGET_MB
-    # overrides the target for skew-prone deployments.
-    tgt_mb = int(os.environ.get("SDM_STREAM_SHUFFLE_TARGET_MB", "64"))
-    try:
-        in_bytes = sum(
-            os.path.getsize(os.path.join(in_dir, f))
-            for f in os.listdir(in_dir) if f.endswith(".parquet"))
-    except OSError:
-        in_bytes = 0
-    trig_bytes = in_bytes / max(n_input_files, 1)
-    batch_parts = max(1, min(4 * par,
-                             int(trig_bytes // (tgt_mb << 20)) + 1))
+    # the join/window/aggregate exchanges.
+    in_bytes = source_bytes(in_dir)
+    trig_bytes = None if in_bytes is None else in_bytes / max(n_input_files, 1)
+    batch_parts = partitions_for(spark, trig_bytes, SHUFFLE_PARTITION_BYTES,
+                                 cap=4 * par)
     # CPU-bound hash stage: floor at the core count (the interpreted
     # HOF md5 work is dense even for sub-MB triggers — an A/B at sf0.1
     # measured ~1 s/trigger LOST by serializing it), growing past the
     # cores only when a trigger is big enough to want more waves
     # (~32 MB/task, so the exchange stays amortized).
-    hash_parts = max(par, min(4 * par, int(trig_bytes // (32 << 20)) + 1))
+    hash_parts = partitions_for(spark, trig_bytes, 32 << 20,
+                                floor=par, cap=4 * par)
     # no auto-broadcast inside the micro-batch body (r11): every
     # BroadcastExchange runs as its own driver-scheduled job (plus a
     # driver gap either side), and with batch_parts-sized static
@@ -960,7 +940,7 @@ def stream_bloom_decontaminate(
         shingle_n=shingle_n, m_bits=m_bits, k_hashes=k_hashes)
     name = "stream_bloom_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(probed, name=name, output_mode="append",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))
 
 
 def stream_dsir_weights(
@@ -1007,4 +987,4 @@ def stream_dsir_weights(
     scored = dsir_apply(sdf, model, floor, n_buckets=n_buckets)
     name = "stream_dsir_" + str(abs(hash(sf_dir)) % 10**8)
     return run_available_now(scored, name=name, output_mode="append",
-                             input_bytes=_src_bytes(path))
+                             input_bytes=source_bytes(path))

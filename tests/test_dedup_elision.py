@@ -502,8 +502,6 @@ def test_jsonl_mixed_type_column_refuses_injectivity(spark, tmp_path):
     of the int fast path."""
     import json as _json
 
-    import glob as _glob
-
     from sdm_rdfizer_spark.compiler.plan import MappingPlanner
     from sdm_rdfizer_spark.ir import LogicalSource
 
@@ -515,14 +513,14 @@ def test_jsonl_mixed_type_column_refuses_injectivity(spark, tmp_path):
         f.write(_json.dumps({"id": " 3", "name": "n3"}) + "\n")
     ls = LogicalSource(source=str(p), fmt="json", iterator="$[*]")
     planner = MappingPlanner.__new__(MappingPlanner)
-    assert planner._run_injective_probe(ls, ["id"], _glob) is False
+    assert planner._run_injective_probe(ls, ["id"]) is False
     # all-int jsonl stays on the fast path (the fix must not over-refuse)
     q = tmp_path / "clean.jsonl"
     with q.open("w") as f:
         for i in range(1, 50):
             f.write(_json.dumps({"id": i, "name": f"n{i}"}) + "\n")
     ls2 = LogicalSource(source=str(q), fmt="json", iterator="$[*]")
-    assert planner._run_injective_probe(ls2, ["id"], _glob) is True
+    assert planner._run_injective_probe(ls2, ["id"]) is True
     # end-to-end: the mixed file keeps its dedup shuffle and the
     # colliding subject's name triple collapses to one row
     m = PFX + f"""
