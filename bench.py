@@ -19,17 +19,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
-
+def measure_session(app: str, cpus: str):
+    """The measurement session: ``local[cpus]`` with the bench's knobs,
+    tuned like the engine's own session."""
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sdm-rdfizer-spark-bench")
+        .appName(app)
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -59,12 +56,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     from sdm_rdfizer_spark.engine import tune_session
 
-    tune_session(spark)
+    return tune_session(spark)
 
-    import __spark_entry__ as entry_mod
 
-    # warmup: initialize parquet datasource, codegen, shuffle machinery so
-    # the first timed query isn't charged JVM/session init (~15 s here)
+def warm_up(spark, sf_dir: str, cpus: str) -> None:
+    """Initialize the parquet datasource, codegen, shuffle machinery and
+    the Python worker pool, so the first timed query isn't charged
+    JVM/session init (~15 s here)."""
     from pyspark.sql import functions as F
 
     spark.range(0, 1_000_000, 1, 8).agg(F.sum("id")).collect()
@@ -77,21 +75,48 @@ def main() -> None:
     spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(_warm, "id long") \
         .write.format("noop").mode("overwrite").save()
 
-    # host-speed calibration (r7): this VM drifts up to ~3× between
-    # measurement windows (r7 measured an UNTOUCHED code path at 2.9×
-    # its r6 isolated number), so every artifact carries the wall time
-    # of a fixed synthetic workload, taken before and after the sweep.
-    # Cross-day comparisons divide by the calibration ratio instead of
-    # guessing; a big start/end delta flags mid-sweep drift.
-    def _calibrate() -> float:
-        t0 = time.perf_counter()
-        (spark.range(0, 100_000_000, 1, 32)
-         .groupBy((F.col("id") % 4096).alias("k"))
-         .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
-         .orderBy("k").write.format("noop").mode("overwrite").save())
-        return round(time.perf_counter() - t0, 2)
 
-    calibration_start = _calibrate()
+def calibrate(spark) -> float:
+    """Wall seconds of a fixed synthetic workload (host-speed calibration,
+    r7): this VM drifts up to ~3× between measurement windows (r7
+    measured an UNTOUCHED code path at 2.9× its r6 isolated number), so
+    every artifact carries it, taken before and after the sweep.
+    Cross-day comparisons divide by the calibration ratio instead of
+    guessing; a big start/end delta flags mid-sweep drift."""
+    from pyspark.sql import functions as F
+
+    t0 = time.perf_counter()
+    (spark.range(0, 100_000_000, 1, 32)
+     .groupBy((F.col("id") % 4096).alias("k"))
+     .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
+     .orderBy("k").write.format("noop").mode("overwrite").save())
+    return round(time.perf_counter() - t0, 2)
+
+
+def release(spark) -> None:
+    """Drop persisted parent-join DFs AND localCheckpoint blocks between
+    timed runs: clearCache only covers the SQL cache, while checkpointed
+    RDDs (jaccard candidates, semantic-dedup assignments, ...) stay in
+    the block manager forever in a one-JVM sweep — at sf10 ~40 queries
+    of residue starved storage+execution memory until a later
+    aggregation made ZERO task progress for 30 min (isolated re-run of
+    the same query: 290 s)."""
+    spark.catalog.clearCache()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else None
+
+    spark = measure_session("sdm-rdfizer-spark-bench", cpus)
+    import __spark_entry__ as entry_mod
+
+    warm_up(spark, sf_dir, cpus)
+    calibration_start = calibrate(spark)
 
     # min of two timed runs per query: this host shows bursty noisy-
     # neighbor stalls (identical runs measured 4.3 s and 23.4 s minutes
@@ -118,18 +143,6 @@ def main() -> None:
         if name in skip:
             print(f"[bench] {name}: SKIPPED", file=sys.stderr, flush=True)
             continue
-        def _release():
-            # drop persisted parent-join DFs AND localCheckpoint blocks:
-            # clearCache only covers the SQL cache, while checkpointed
-            # RDDs (jaccard candidates, semantic-dedup assignments, ...)
-            # stay in the block manager forever in this one-JVM sweep —
-            # at sf10 ~40 queries of residue starved storage+execution
-            # memory until a later aggregation made ZERO task progress
-            # for 30 min (isolated re-run of the same query: 290 s)
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist()
-
         best = None
         try:
             for _ in range(runs):
@@ -138,18 +151,18 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
-                _release()
+                release(spark)
         except ScaleGated as exc:  # documented scale boundary, not a bug
             gated[name] = str(exc)[:200]
             print(f"[bench] {name}: GATED {gated[name]}",
                   file=sys.stderr, flush=True)
-            _release()
+            release(spark)
             continue
         except Exception as exc:  # one failure must not abort the sweep
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"[bench] {name}: ERROR {errors[name]}",
                   file=sys.stderr, flush=True)
-            _release()
+            release(spark)
             continue
         timings[name] = round(best, 2)
         print(f"[bench] {name}: {timings[name]}s", file=sys.stderr, flush=True)
@@ -161,7 +174,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "calibration_sec": [calibration_start, _calibrate()],
+        "calibration_sec": [calibration_start, calibrate(spark)],
     }
     if skip:
         result["skipped"] = sorted(skip)

@@ -288,11 +288,13 @@ def _target_array(tset: set):
 class MappingPlanner:
     """Compiles a list of TriplesMap into triple DataFrames.
 
-    One planner instance per materialization run: it owns the scan cache and
-    the parent-(key,subject) join cache so repeated joins against the same
-    parent reuse one persisted DataFrame (the reference builds its
-    ``join_table`` hash once per (parentTM, child-attrs) and shares it
-    globally, semantify.py:523-931 + 6902-6996).
+    One planner instance per materialization run. Its one memo
+    (``_once``) holds the scans and the parent-side join tables
+    (``_join_table``), so every join against the same (parent, keys)
+    reads one DataFrame — persisted when several joins read it (the
+    reference builds its ``join_table`` hash once per (parentTM,
+    child-attrs) and shares it globally, semantify.py:523-931 +
+    6902-6996).
     """
 
     def __init__(
@@ -320,19 +322,15 @@ class MappingPlanner:
         # re-runs the whole TM per target file, semantify.py:10013-10088 —
         # one tagged pass + filtered writes replaces that)
         self.collect_targets = collect_targets
-        self._scan_cache: dict[tuple, DataFrame] = {}
-        self._parent_cache: dict[tuple, DataFrame] = {}
+        self._memo: dict[tuple, object] = {}
         self._parent_refcount: dict[tuple, int] = {}
-        self._parent_unique: dict[tuple, bool] = {}
-        self._parent_broadcast: dict[tuple, bool] = {}
-        self._parent_plain: dict[tuple, DataFrame] = {}
         self._fuse_counter = 0
         # compile_all compiles TriplesMaps from a small thread pool (the
         # compile phase is dominated by py4j round-trip LATENCY — one
         # socket round trip per Column operation — so independent TMs
         # overlap almost perfectly; a 10-TM GTFS mapping measured ~4 s
         # serial vs ~1 s pooled). This RLock serializes every touch of
-        # the shared caches above so concurrent TMs can't build the same
+        # the memo above so concurrent TMs can't build the same
         # scan/parent subplan twice (the shared-subplan design is what
         # the plan census and the persist() reuse depend on).
         self._compile_lock = threading.RLock()
@@ -350,12 +348,23 @@ class MappingPlanner:
                 f"{context} references TriplesMap {tm_id!r}, which is not "
                 f"defined in this mapping document") from None
 
+    def _once(self, key: tuple, build):
+        """``build()`` once per planner and ``key``, memoized. Takes
+        ``_compile_lock`` (an RLock, so a build may call ``_once``)."""
+        with self._compile_lock:
+            if key not in self._memo:
+                self._memo[key] = build()
+            return self._memo[key]
+
     def _count_parent_refs(self) -> None:
+        """Joins that read each join table's pairs, keyed like
+        ``_join_table``: referencing and quoted object maps, and quoted
+        subjects."""
         for tm in self.tms:
-            for pom in tm.poms:
-                om = pom.obj
-                if om.kind == PARENT and om.join:
-                    key = (om.parent_tm, tuple(om.join.parent))
+            for om in [tm.subject.term] + [pom.obj for pom in tm.poms]:
+                if om.kind in (PARENT, QUOTED) and om.join:
+                    key = (om.parent_tm, tuple(om.join.parent),
+                           om.kind == QUOTED)
                     self._parent_refcount[key] = self._parent_refcount.get(key, 0) + 1
 
     def _xml_parent_refs(self, key: tuple) -> list[str]:
@@ -376,45 +385,37 @@ class MappingPlanner:
         return sorted({r for r in refs if r and r.startswith("..")})
 
     def scan(self, tm: TriplesMap) -> DataFrame:
-        with self._compile_lock:
-            return self._scan_locked(tm)
-
-    def _scan_locked(self, tm: TriplesMap) -> DataFrame:
+        """The TriplesMap's logical source, read once per planner."""
         key = tm.source.cache_key()
-        if key not in self._scan_cache:
-            ls = tm.source
-            if self.opts.validate_csv and ls.fmt in ("csv", "tsv"):
-                ls = replace(ls, options={**ls.options, "mode": "FAILFAST"})
-            if ls.fmt == "xml":
-                prefs = self._xml_parent_refs(key)
-                if prefs:
-                    ls = replace(ls, options={
-                        **ls.options, "xml_parent_refs": "\x1f".join(prefs)})
-            if ls.fmt == "json" and not self.opts.input_dedup:
-                df = self._json_scan(ls)
-            elif self.opts.input_dedup:
-                if ls.fmt in ("sql", "jdbc") and ls.table and not ls.query:
-                    # DB-side SELECT DISTINCT over only the mapped columns
-                    # (the reference's translate_sql, functions.py:211-288)
-                    cols = self._source_columns(key)
-                    if cols is not None:
-                        from ..sources import projection_query
+        return self._once(("scan", key), lambda: self._read(tm.source, key))
 
-                        ls = replace(ls, query=projection_query(
-                            ls.table, cols, url=ls.source))
-                        df = read_source(self.spark, ls)
-                    else:
-                        # non-plain-column references disable the generated
-                        # SELECT DISTINCT — fall back to a Spark-side dedup
-                        # like the file path (ADVICE r2; the reference's
-                        # translate_sql always emits DISTINCT)
-                        df = read_source(self.spark, ls).dropDuplicates()
-                else:
-                    df = read_source(self.spark, ls).dropDuplicates()
-            else:
-                df = read_source(self.spark, ls)
-            self._scan_cache[key] = df
-        return self._scan_cache[key]
+    def _read(self, ls, key: tuple) -> DataFrame:
+        if self.opts.validate_csv and ls.fmt in ("csv", "tsv"):
+            ls = replace(ls, options={**ls.options, "mode": "FAILFAST"})
+        if ls.fmt == "xml":
+            prefs = self._xml_parent_refs(key)
+            if prefs:
+                ls = replace(ls, options={
+                    **ls.options, "xml_parent_refs": "\x1f".join(prefs)})
+        if ls.fmt == "json" and not self.opts.input_dedup:
+            return self._json_scan(ls)
+        if not self.opts.input_dedup:
+            return read_source(self.spark, ls)
+        if ls.fmt in ("sql", "jdbc") and ls.table and not ls.query:
+            # DB-side SELECT DISTINCT over only the mapped columns
+            # (the reference's translate_sql, functions.py:211-288)
+            cols = self._source_columns(key)
+            if cols is not None:
+                from ..sources import projection_query
+
+                ls = replace(ls, query=projection_query(
+                    ls.table, cols, url=ls.source))
+                return read_source(self.spark, ls)
+            # non-plain-column references disable the generated
+            # SELECT DISTINCT — fall back to a Spark-side dedup
+            # like the file path (ADVICE r2; the reference's
+            # translate_sql always emits DISTINCT)
+        return read_source(self.spark, ls).dropDuplicates()
 
     # JSON parse amplification (r10, guide §1.5/§6): a JSON document
     # consumed by k TriplesMaps / iterator depths is re-PARSED once per
@@ -436,9 +437,8 @@ class MappingPlanner:
         # remote (HTTP) documents stage to a local file first, exactly as
         # read_source does — spark.read.json cannot list an http:// path
         src = _stage_remote(str(ls.source))
-        bkey = ("__json_base__", src)
-        base = self._scan_cache.get(bkey)
-        if base is None:
+
+        def build():
             base = json_base(self.spark, src)
             # count the plan passes that read this document: a fused
             # logical-source group is ONE reader, every other TM one
@@ -454,8 +454,10 @@ class MappingPlanner:
             if (n_readers > 1 and nbytes is not None
                     and nbytes <= JSON_CKPT_MAX_BYTES):
                 base = base.localCheckpoint(eager=True)
-            self._scan_cache[bkey] = base
-        return apply_json_iterator(base, ls.iterator)
+            return base
+
+        return apply_json_iterator(self._once(("json", src), build),
+                                   ls.iterator)
 
     def _source_columns(self, source_key: tuple) -> list[str] | None:
         """All column references any TriplesMap (or join into one) makes
@@ -620,6 +622,9 @@ class MappingPlanner:
         distributed equivalent of the reference's PTT/DTT in-memory dedup
         tables (semantify.py:53-54, 6580-6605); eviction/compression
         (semantify.py:212-265) are unnecessary because the shuffle spills.
+        Under dedup_scope "reference" the triples keep their ``__rule``
+        column, so a caller can merge outputs under the same keying; the
+        engine's entry points drop it.
         """
         asserted = [tm for tm in self.tms if tm.kind != "NonAssertedTriplesMap"]
         # compile units: [tm] for a TM with its own plan, the member list
@@ -743,8 +748,6 @@ class MappingPlanner:
             # term never participates (which graph survives a collapse is
             # first-encountered in the reference; arbitrary here).
             out = dedup_triples(out, self.opts.dedup_scope)
-        if self.track_rules and not self.collect_targets:
-            out = out.drop("__rule")
         return out
 
     def _fuse_units(self, units: list) -> list:
@@ -1201,8 +1204,8 @@ class MappingPlanner:
             # subject term comes from joining the quoted TM's rows on the
             # condition — an inner join that multiplies/filters every POM
             # of this TM, so it is applied to the scan before term compile
-            df, qsub = self._join_quoted_subject(tm, df)
-            subj = CompiledValue(F.col(qsub), F.col(qsub).isNotNull())
+            df = self._join_quoted_subject(tm, df)
+            subj = CompiledValue(F.col("__qsub"), F.col("__qsub").isNotNull())
         elif subject_term.kind == QUOTED:
             # RML-star quoted subject — evaluated over the current row
             # (reference: inner_semantify_file call at semantify.py:6529)
@@ -1598,12 +1601,19 @@ class MappingPlanner:
             counter["n"] += 1
             tag = counter["n"]
             nkeys = len(pkeys)
-            grouped = self._parent_groups(ptm, pkeys)
+            sel, _, small = self._join_table(ptm, pkeys)
+            # ONE collect_set shuffle over the pre-dedup selection, with
+            # map-side partial aggregation, instead of dropDuplicates +
+            # groupBy (two shuffles back to back, plan-audit r2)
+            grouped = self._once(
+                ("groups", ptm.tm_id, pkeys),
+                lambda: sel.groupBy(*[f"__pk{i}" for i in range(nkeys)]).agg(
+                    F.array_sort(F.collect_set("__po")).alias("__gi")))
             grouped = grouped.select(
-                *[F.col(f"__gk{i}").alias(f"__gpk{tag}_{i}") for i in range(nkeys)],
+                *[F.col(f"__pk{i}").alias(f"__gpk{tag}_{i}") for i in range(nkeys)],
                 F.col("__gi").alias(f"__gpi{tag}"),
             )
-            if self._parent_broadcast.get((ptm.tm_id, pkeys)):
+            if small:
                 grouped = F.broadcast(grouped)
             keys = [self._join_key_expr(cur, c) for c in item.join.child]
             cond = reduce(
@@ -1617,117 +1627,90 @@ class MappingPlanner:
 
         return parent_items
 
-    def _parent_groups(self, parent_tm: TriplesMap, parent_keys: tuple) -> DataFrame:
-        """(key… → sorted array of distinct parent subjects) for gather
-        items — ONE collect_set shuffle with map-side partial aggregation,
-        instead of dropDuplicates + groupBy (two shuffles back to back,
-        plan-audit r2). Cached per (parentTM, keys) like _parent_pairs."""
-        with self._compile_lock:
-            return self._parent_groups_locked(parent_tm, parent_keys)
-
-    def _parent_groups_locked(self, parent_tm: TriplesMap,
-                              parent_keys: tuple) -> DataFrame:
-        cache_key = ("groups", parent_tm.tm_id, parent_keys)
-        if cache_key in self._parent_cache:
-            return self._parent_cache[cache_key]
-        pdf = self.parent_scan(parent_tm)
-        players = ExprLayers()
-        psub = compile_term_map(pdf, parent_tm.subject.term, "subject",
-                                base=self.base, layers=players)
-        pkey_exprs = [self._join_key_expr(pdf, k, players) for k in parent_keys]
-        sel = players.apply(pdf).where(psub.valid).select(
-            psub.expr.alias("__po"),
-            *[k.alias(f"__gk{i}") for i, k in enumerate(pkey_exprs)],
-        )
-        for i in range(len(parent_keys)):
-            sel = sel.where(valid_value(F.col(f"__gk{i}")))
-        grouped = sel.groupBy(*[f"__gk{i}" for i in range(len(parent_keys))]) \
-            .agg(F.array_sort(F.collect_set("__po")).alias("__gi"))
-        nbytes = source_bytes(parent_tm.source.source)
-        if nbytes is not None and nbytes < BROADCAST_BYTES:
-            self._parent_broadcast[(parent_tm.tm_id, parent_keys)] = True
-        self._parent_cache[cache_key] = grouped
-        return grouped
-
     # ------------------------------------------------------------------
     def _compile_join(self, tm, df, pred, om, graphs, layers, tgs=frozenset()):
         parent_tm = self._resolve_tm(om.parent_tm, f"a join in {tm.tm_id}")
         same_source = parent_tm.source.cache_key() == tm.source.cache_key()
 
-        if om.join is None or not om.join.child:
-            if not same_source:
-                raise ValueError(
-                    f"join without condition requires the same logical source "
-                    f"({tm.tm_id} → {om.parent_tm})"
-                )
-            # join-as-projection (inner_functions.py:139-679): parent subject
+        no_condition = om.join is None or not om.join.child
+        if no_condition and not same_source:
+            raise ValueError(
+                f"join without condition requires the same logical source "
+                f"({tm.tm_id} → {om.parent_tm})"
+            )
+        if no_condition or (same_source and om.join.child == om.join.parent):
+            # join-as-projection (inner_functions.py:139-679) or self-join
+            # elimination (semantify.py:1450-1523: equal keys on the same
+            # source ⇒ the parent row IS the child row): parent subject
             # evaluated over the current row — no join at all; fused into
             # the TM's single explode pass.
             pobj = compile_term_map(df, parent_tm.subject.term, "subject",
-                                    base=self.base, layers=layers)
+                                    base=self.base, layers=layers,
+                                    func_maps=parent_tm.func_maps)
             return [(pred.expr, pobj.expr, graph, pred.valid & pobj.valid, tgs,
                      _rule_id(om))
                     for graph in graphs]
 
-        if same_source and om.join.child == om.join.parent:
-            # self-join elimination (semantify.py:1450-1523): equal keys on
-            # the same source ⇒ the parent row IS the child row.
-            pobj = compile_term_map(df, parent_tm.subject.term, "subject",
-                                    base=self.base, layers=layers)
-            return [(pred.expr, pobj.expr, graph, pred.valid & pobj.valid, tgs,
-                     _rule_id(om))
-                    for graph in graphs]
-
-        pairs = self._parent_pairs(parent_tm, tuple(om.join.parent))
+        pkeys = tuple(om.join.parent)
+        _, pairs, small = self._join_table(parent_tm, pkeys)
         key_exprs = [
             self._join_key_expr(df, c, layers) for c in om.join.child
         ]
-        nkeys = len(om.join.child)
-        pred_expr, pred_valid = pred.expr, pred.valid
+        if not self._parent_key_unique(parent_tm, pkeys):
+            return self._join_branch(pairs, small, key_exprs, pred, graphs,
+                                     tgs, om)
+        # N:1 join — fuse as a left join into the single explode pass
+        # (reference: is_key_unique/type_join, semantify.py:1403-1422).
+        # Row multiplicity is preserved, so other POMs are unaffected;
+        # an unmatched or NULL-ish child key just yields a NULL parent
+        # subject, which the per-entry validity drops.
+        nkeys = len(key_exprs)
+        with self._compile_lock:
+            self._fuse_counter += 1
+            tag = self._fuse_counter
 
-        if self._parent_key_unique(parent_tm, tuple(om.join.parent)):
-            # N:1 join — fuse as a left join into the single explode pass
-            # (reference: is_key_unique/type_join, semantify.py:1403-1422).
-            # Row multiplicity is preserved, so other POMs are unaffected;
-            # an unmatched or NULL-ish child key just yields a NULL parent
-            # subject, which the per-entry validity drops.
-            with self._compile_lock:
-                self._fuse_counter += 1
-                tag = self._fuse_counter
-
-            def fuse(base_df: DataFrame):
-                renamed = pairs.select(
-                    F.col("__po").alias(f"__fpo{tag}"),
-                    *[F.col(f"__pk{i}").alias(f"__fpk{tag}_{i}")
-                      for i in range(nkeys)],
+        def fuse(base_df: DataFrame):
+            renamed = pairs.select(
+                F.col("__po").alias(f"__fpo{tag}"),
+                *[F.col(f"__pk{i}").alias(f"__fpk{tag}_{i}")
+                  for i in range(nkeys)],
+            )
+            if small:
+                renamed = F.broadcast(renamed)
+            cond = reduce(
+                lambda a, b: a & b,
+                [key_exprs[i] == renamed[f"__fpk{tag}_{i}"] for i in range(nkeys)],
+            )
+            joined = base_df.join(renamed, cond, "left")
+            fuse_entries = [
+                (
+                    pred.expr,
+                    F.col(f"__fpo{tag}"),
+                    graph,
+                    pred.valid & F.col(f"__fpo{tag}").isNotNull(),
+                    tgs,
+                    _rule_id(om),
                 )
-                if self._parent_broadcast.get((parent_tm.tm_id, tuple(om.join.parent))):
-                    renamed = F.broadcast(renamed)
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [key_exprs[i] == renamed[f"__fpk{tag}_{i}"] for i in range(nkeys)],
-                )
-                joined = base_df.join(renamed, cond, "left")
-                fuse_entries = [
-                    (
-                        pred_expr,
-                        F.col(f"__fpo{tag}"),
-                        graph,
-                        pred_valid & F.col(f"__fpo{tag}").isNotNull(),
-                        tgs,
-                        _rule_id(om),
-                    )
-                    for graph in graphs
-                ]
-                return joined, fuse_entries
+                for graph in graphs
+            ]
+            return joined, fuse_entries
 
-            return ("fuse", fuse)
+        return ("fuse", fuse)
+
+    def _join_branch(self, pairs, small, key_exprs, pred, graphs, tgs, om):
+        """A join that changes the child's row multiplicity (1-N, or any
+        quoted object): a closure over the layered base frame that
+        inner-joins its (subject, predicate, graph, keys…) rows with a
+        join table's pairs into one union branch."""
+        if small:
+            pairs = F.broadcast(pairs)
+        nkeys = len(key_exprs)
 
         def build(base_df: DataFrame) -> DataFrame:
             graph = graphs[0] if len(graphs) == 1 else F.explode(F.array(*graphs))
-            child = base_df.where(pred_valid).select(
+            child = base_df.where(pred.valid).select(
                 "__s",
-                pred_expr.alias("__p"),
+                pred.expr.alias("__p"),
                 graph.alias("__g"),
                 *[k.alias(f"__ck{i}") for i, k in enumerate(key_exprs)],
             )
@@ -1797,83 +1780,79 @@ class MappingPlanner:
                      _rule_id(om))
                     for graph in graphs]
 
-        qdf = self.parent_scan(qtm)
-        qlayers = ExprLayers()
-        qcv = self._quoted_term(qdf, qtm, layers=qlayers)
-        pkey_exprs = [
-            self._join_key_expr(qdf, k, qlayers) for k in om.join.parent
-        ]
-        pairs = qlayers.apply(qdf).where(qcv.valid).select(
-            qcv.expr.alias("__po"),
-            *[k.alias(f"__pk{i}") for i, k in enumerate(pkey_exprs)],
-        )
-        # raw-unique keys ⇒ pairs already distinct (same shortcut as
-        # _parent_pairs / _join_quoted_subject)
-        if not self._raw_key_unique(qtm, tuple(om.join.parent)):
-            pairs = pairs.dropDuplicates()
+        _, pairs, small = self._join_table(qtm, tuple(om.join.parent),
+                                           quoted=True)
         key_exprs = [self._join_key_expr(df, c, layers) for c in om.join.child]
-        nkeys = len(om.join.child)
-        pred_expr, pred_valid = pred.expr, pred.valid
-
-        def build(base_df: DataFrame) -> DataFrame:
-            graph = graphs[0] if len(graphs) == 1 else F.explode(F.array(*graphs))
-            child = base_df.where(pred_valid).select(
-                "__s", pred_expr.alias("__p"), graph.alias("__g"),
-                *[k.alias(f"__ck{i}") for i, k in enumerate(key_exprs)],
-            )
-            for i in range(nkeys):
-                child = child.where(valid_value(F.col(f"__ck{i}")))
-            cond = reduce(
-                lambda a, b: a & b,
-                [child[f"__ck{i}"] == pairs[f"__pk{i}"] for i in range(nkeys)],
-            )
-            cols = [
-                F.col("__s").alias("s"), F.col("__p").alias("p"),
-                F.col("__po").alias("o"), F.col("__g").alias("g"),
-            ]
-            if self.collect_targets:
-                cols.append(_target_array(tgs).alias("__targets"))
-            if self.track_rules:
-                cols.append(F.lit(_rule_id(om)).cast("string").alias("__rule"))
-            return child.join(pairs, cond, "inner").select(*cols)
-
-        return build
+        return self._join_branch(pairs, small, key_exprs, pred, graphs, tgs, om)
 
     def _join_quoted_subject(self, tm: TriplesMap, df: DataFrame):
         """Inner-join the quoted TM's (join-key…, << s p o >>) pairs into
-        the child scan; returns (joined df, quoted-subject column name).
-        The pairs side is deduped and broadcast when small — same shape as
-        object-position quoted joins (_compile_quoted)."""
+        the child scan, the quoted subject as column ``__qsub``."""
         om = tm.subject.term
         qtm = self._resolve_tm(om.parent_tm, f"the quoted subject of {tm.tm_id}")
-        qdf = self.parent_scan(qtm)
-        qlayers = ExprLayers()
-        qcv = self._quoted_term(qdf, qtm, layers=qlayers)
-        pkeys = [self._join_key_expr(qdf, k, qlayers) for k in om.join.parent]
-        pairs = qlayers.apply(qdf).where(qcv.valid).select(
-            qcv.expr.alias("__qsub"),
-            *[k.alias(f"__qsk{i}") for i, k in enumerate(pkeys)],
-        )
-        for i in range(len(pkeys)):
-            pairs = pairs.where(valid_value(F.col(f"__qsk{i}")))
-        # raw-unique join keys ⇒ (key…, quoted-term) pairs are already
-        # distinct — skip the build-side dedup shuffle (same shortcut as
-        # _parent_pairs; conservative for string/float keys)
-        if not self._raw_key_unique(qtm, tuple(om.join.parent)):
-            pairs = pairs.dropDuplicates()
-        nbytes = source_bytes(qtm.source.source)
-        if nbytes is not None and nbytes < BROADCAST_BYTES:
+        _, pairs, small = self._join_table(qtm, tuple(om.join.parent),
+                                           quoted=True)
+        pairs = pairs.withColumnRenamed("__po", "__qsub")
+        if small:
             pairs = F.broadcast(pairs)
         ckeys = [self._join_key_expr(df, c) for c in om.join.child]
         for k in ckeys:
             df = df.where(valid_value(k))
         cond = reduce(
             lambda a, b: a & b,
-            [ckeys[i] == pairs[f"__qsk{i}"] for i in range(len(ckeys))],
+            [ckeys[i] == pairs[f"__pk{i}"] for i in range(len(ckeys))],
         )
-        joined = df.join(pairs, cond, "inner").drop(
-            *[f"__qsk{i}" for i in range(len(pkeys))])
-        return joined, "__qsub"
+        return df.join(pairs, cond, "inner").drop(
+            *[f"__pk{i}" for i in range(len(ckeys))])
+
+    def _join_table(self, ptm: TriplesMap, pkeys: tuple,
+                    quoted: bool = False) -> tuple:
+        """The parent side of every join, built once per (parent, keys,
+        quoted): ``(sel, pairs, small)``. ``sel`` projects the parent's
+        subject — or with ``quoted`` its ``<< s p o >>`` term — as
+        ``__po`` and the join keys as ``__pk0``…, over rows where all are
+        valid; ``pairs`` is its distinct (the Spark analogue of the
+        reference's ``hash_maker`` join-table family, semantify.py:
+        523-1402 + cc_functions.py:13-120), persisted when several joins
+        read it and it is not ``small``; ``small`` tells every consumer
+        to add the broadcast hint. Subject joins (N:1 fused or 1-N),
+        quoted objects and quoted subjects join ``pairs``; gather items
+        group ``sel``."""
+        def build():
+            pdf = self.parent_scan(ptm)
+            layers = ExprLayers()
+            if quoted:
+                term = self._quoted_term(pdf, ptm, layers=layers)
+            else:
+                term = compile_term_map(pdf, ptm.subject.term, "subject",
+                                        base=self.base, layers=layers,
+                                        func_maps=ptm.func_maps)
+            keys = [self._join_key_expr(pdf, k, layers) for k in pkeys]
+            sel = layers.apply(pdf).where(term.valid).select(
+                term.expr.alias("__po"),
+                *[k.alias(f"__pk{i}") for i, k in enumerate(keys)],
+            )
+            for i in range(len(pkeys)):
+                sel = sel.where(valid_value(F.col(f"__pk{i}")))
+            # raw-unique keys ⇒ (key, term) pairs are already distinct —
+            # skip the build-side dedup shuffle (the duckdb footer probe
+            # is cached; string/float keys stay conservative and dedup)
+            pairs = (sel if self._raw_key_unique(ptm, pkeys)
+                     else sel.dropDuplicates())
+            nbytes = source_bytes(ptm.source.source)
+            # Catalyst has no stats for JDBC relations, so a 25-row
+            # dimension parent would otherwise plan a sort-merge join
+            # that shuffles the FACT side (judge r5). One bounded count
+            # query at compile time buys the broadcast hint.
+            small = ((nbytes is not None and nbytes < BROADCAST_BYTES)
+                     or (ptm.source.fmt in ("sql", "jdbc")
+                         and self._db_parent_small(ptm)))
+            if (not small and self._parent_refcount.get(
+                    (ptm.tm_id, pkeys, quoted), 0) > 1):
+                pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+            return sel, pairs, small
+
+        return self._once(("join", ptm.tm_id, pkeys, quoted), build)
 
     def _parent_key_unique(self, parent_tm: TriplesMap, parent_keys: tuple) -> bool:
         """True when every parent join key maps to exactly one parent
@@ -1895,30 +1874,22 @@ class MappingPlanner:
         preserves row multiplicity under any join strategy, so a unique
         parent above the hint threshold still fuses and AQE picks
         broadcast vs shuffle from runtime sizes."""
-        with self._compile_lock:
-            return self._parent_key_unique_locked(parent_tm, parent_keys)
+        def probe() -> bool:
+            _, pairs, small = self._join_table(parent_tm, parent_keys)
+            if self._raw_key_unique(parent_tm, parent_keys):
+                return True
+            if not small:
+                return False
+            row = pairs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct(*[F.col(f"__pk{i}")
+                                   for i in range(len(parent_keys))]).alias("k"),
+            ).first()
+            return row["n"] == row["k"]
 
-    def _parent_key_unique_locked(self, parent_tm, parent_keys) -> bool:
-        cache_key = (parent_tm.tm_id, parent_keys)
-        if cache_key not in self._parent_unique:
-            self._parent_pairs(parent_tm, cache_key[1])
-            fast = self._raw_key_unique(parent_tm, parent_keys)
-            if fast:
-                self._parent_unique[cache_key] = True
-            elif not self._parent_broadcast.get(cache_key):
-                self._parent_unique[cache_key] = False
-            else:
-                pairs = self._parent_plain[cache_key]
-                kcols = [f"__pk{i}" for i in range(len(parent_keys))]
-                row = pairs.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_distinct(*[F.col(c) for c in kcols]).alias("k"),
-                ).first()
-                self._parent_unique[cache_key] = row["n"] == row["k"]
-        return self._parent_unique[cache_key]
+        return self._once(("unique", parent_tm.tm_id, parent_keys), probe)
 
-    def _db_parent_small(self, parent_tm: TriplesMap,
-                         cache_key: tuple) -> bool:
+    def _db_parent_small(self, parent_tm: TriplesMap) -> bool:
         """Bounded row-count probe of a database-backed parent: True when
         the RAW scan has at most DB_BROADCAST_ROWS rows, so broadcasting
         the compiled pairs is safe (pairs rows ≤ source rows — the pairs
@@ -1931,16 +1902,16 @@ class MappingPlanner:
         LocalLimit stops consuming the cursor after cap+1 rows, so a huge
         parent costs a bounded prefix read and simply returns False (no
         broadcast — the shuffle-join plan is right for it anyway).
-        Memoized per planner."""
-        mkey = ("dbsmall",) + cache_key
-        if mkey not in self._parent_unique:
+        Memoized per planner and source."""
+        def probe() -> bool:
             try:
                 n = (self.parent_scan(parent_tm)
                      .limit(DB_BROADCAST_ROWS + 1).count())
-                self._parent_unique[mkey] = n <= DB_BROADCAST_ROWS
+                return n <= DB_BROADCAST_ROWS
             except Exception:
-                self._parent_unique[mkey] = False
-        return self._parent_unique[mkey]
+                return False
+
+        return self._once(("dbsmall", parent_tm.source.cache_key()), probe)
 
     def _raw_key_unique(self, parent_tm: TriplesMap, parent_keys: tuple):
         """True when the raw join-key columns are unique in a plain
@@ -1953,7 +1924,7 @@ class MappingPlanner:
         other case; raw duplicates also return None since equal
         (key, subject) pairs may still collapse to unique. Memoized
         MODULE-wide on the parent's file listing (``file_memo``) —
-        callers (_parent_pairs and _parent_key_unique) and repeated
+        callers (_join_table and _parent_key_unique) and repeated
         compiles share one probe."""
         return file_memo(
             _PROBE_CACHE, "raw", parent_tm.source.source,
@@ -2066,52 +2037,3 @@ class MappingPlanner:
         if layers is not None:
             raw = layers.add(0, ("canon", key), raw)
         return raw
-
-    def _parent_pairs(self, parent_tm: TriplesMap, parent_keys: tuple) -> DataFrame:
-        """Distinct (key…, subject) pairs of the parent TM — the Spark
-        analogue of the reference's ``hash_maker`` join table
-        (semantify.py:523-931), cached per (parentTM, keys) and persisted
-        when probed by more than one join."""
-        with self._compile_lock:
-            return self._parent_pairs_locked(parent_tm, parent_keys)
-
-    def _parent_pairs_locked(self, parent_tm: TriplesMap,
-                             parent_keys: tuple) -> DataFrame:
-        cache_key = (parent_tm.tm_id, parent_keys)
-        if cache_key in self._parent_cache:
-            return self._parent_cache[cache_key]
-        pdf = self.parent_scan(parent_tm)
-        players = ExprLayers()
-        psub = compile_term_map(pdf, parent_tm.subject.term, "subject",
-                                base=self.base, layers=players)
-        pkey_exprs = [self._join_key_expr(pdf, k, players) for k in parent_keys]
-        sel = players.apply(pdf).where(psub.valid).select(
-            psub.expr.alias("__po"),
-            *[k.alias(f"__pk{i}") for i, k in enumerate(pkey_exprs)],
-        )
-        for i in range(len(parent_keys)):
-            sel = sel.where(valid_value(F.col(f"__pk{i}")))
-        # raw-unique keys ⇒ (key, subject) pairs are already distinct —
-        # skip the build-side dedup shuffle (the duckdb footer probe is
-        # cached; string/float keys stay conservative and dedup)
-        if self._raw_key_unique(parent_tm, parent_keys):
-            pairs = sel
-        else:
-            pairs = sel.dropDuplicates()
-        self._parent_plain[cache_key] = pairs  # pre-hint frame for stats
-        nbytes = source_bytes(parent_tm.source.source)
-        if nbytes is not None and nbytes < BROADCAST_BYTES:
-            pairs = F.broadcast(pairs)
-            self._parent_broadcast[cache_key] = True
-        elif (parent_tm.source.fmt in ("sql", "jdbc")
-              and self._db_parent_small(parent_tm, cache_key)):
-            # Catalyst has no stats for JDBC relations, so a 25-row
-            # dimension parent would otherwise plan a sort-merge join
-            # that shuffles the FACT side (judge r5). One bounded count
-            # query at compile time buys the broadcast hint.
-            pairs = F.broadcast(pairs)
-            self._parent_broadcast[cache_key] = True
-        elif self._parent_refcount.get(cache_key, 0) > 1:
-            pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        self._parent_cache[cache_key] = pairs
-        return pairs

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -189,7 +190,13 @@ def materialize(
     Settings come from ``options`` and/or keyword overrides named after
     its fields (``remove_duplicates=False``, ``dedup_scope="spo"``, …)."""
     planner, _ = plan_mapping(spark, mapping_text, base_dir, options, **opts)
-    return planner.compile_all()
+    return without_rule(planner, planner.compile_all())
+
+
+def without_rule(planner: MappingPlanner, df: DataFrame) -> DataFrame:
+    """``df`` without the ``__rule`` column that ``compile_all`` keeps
+    under dedup_scope "reference"."""
+    return df.drop("__rule") if planner.track_rules else df
 
 
 def materialize_with_targets(
@@ -208,26 +215,35 @@ def materialize_with_targets(
     the whole TriplesMap once per target file (semantify.py:10013-10088).
     Settings as for ``materialize``.
     """
+    planner, main, frames = _materialize_tagged(
+        spark, mapping_text, base_dir, options, **opts)
+    return (without_rule(planner, main),
+            {spec: without_rule(planner, df) for spec, df in frames.items()})
+
+
+def _materialize_tagged(spark, mapping_text, base_dir, options, **opts):
+    """``materialize_with_targets`` before the ``__rule`` column is
+    dropped: ``(planner, triples, target_frames)``."""
     planner, targets = plan_mapping(spark, mapping_text, base_dir, options,
                                     with_targets=True, **opts)
     raw = planner.compile_all()
     if not targets:
-        return raw, {}
+        return planner, raw, {}
 
     if len(targets) > 1 or any(tm.poms for tm in planner.tms):
         raw = raw.persist()
 
     def finish(df):
         if planner.opts.remove_duplicates:
-            df = dedup_triples(df, planner.opts.dedup_scope)
-        return df.drop("__rule") if planner.track_rules else df
+            return dedup_triples(df, planner.opts.dedup_scope)
+        return df
 
     main = finish(raw.drop("__targets"))
     frames = {}
     for tid, spec in targets.items():
         sub = raw.where(F.array_contains(F.col("__targets"), tid)).drop("__targets")
         frames[spec] = finish(sub)
-    return main, frames
+    return planner, main, frames
 
 
 def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]:
@@ -236,16 +252,17 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
     cfg: RunConfig = load_config(config)
     spark = spark or default_session()
     results: dict[str, DataFrame] = {}
+    tagged: list[DataFrame] = []   # with __rule, for the merge below
     os.makedirs(cfg.output_folder, exist_ok=True)
     for ds in cfg.datasets:
         with open(ds.mapping_path, encoding="utf-8") as f:
             text = f.read()
-        triples, target_frames = materialize_with_targets(
-            spark, text,
-            base_dir=os.path.dirname(os.path.abspath(ds.mapping_path)),
-            options=cfg,
-        )
+        planner, main, target_frames = _materialize_tagged(
+            spark, text, os.path.dirname(os.path.abspath(ds.mapping_path)),
+            cfg)
+        triples = without_rule(planner, main)
         results[ds.name] = triples
+        tagged.append(main)
         if target_frames:
             from .sinks import write_target
 
@@ -256,6 +273,7 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
             # each other in declaration order
             merged: dict[tuple, tuple] = {}
             for spec, frame in target_frames.items():
+                frame = without_rule(planner, frame)
                 key = (spec.path, spec.serialization,
                        spec.compression, spec.encoding)
                 if key in merged:
@@ -275,16 +293,12 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
     if cfg.all_in_one_file and results:
         # reference: every dataset appended into one output file
         # (semantify.py:9957-9968); here: union + global dedup + one write
-        merged = None
-        for df in results.values():
-            merged = df if merged is None else merged.unionByName(df)
+        merged = reduce(DataFrame.unionByName, tagged)
         if cfg.remove_duplicates:
-            # key the cross-dataset merge like each dataset's own dedup:
-            # "spo" collapses across graphs here too; "reference" keys on
-            # the whole quad, because __rule is already dropped per dataset
-            merged = dedup_triples(
-                merged, "spo" if cfg.dedup_scope == "spo" else "spog")
-        _write_out(merged, cfg.output_folder, "output", cfg.output_format)
+            # key the cross-dataset merge like each dataset's own dedup
+            merged = dedup_triples(merged, cfg.dedup_scope)
+        _write_out(without_rule(planner, merged), cfg.output_folder,
+                   "output", cfg.output_format)
     return results
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..compiler.plan import MappingPlanner
 from ..config import Options
-from ..engine import plan_mapping, scoped_conf
+from ..engine import plan_mapping, scoped_conf, without_rule
 from ..ir import LogicalSource, TriplesMap
 from ..sources import (
     file_stats, partitions_for, read_parquet, read_source, source_bytes)
@@ -119,20 +119,15 @@ class StreamingMappingPlanner(MappingPlanner):
         return super().compile_tm(tm, narrow_refs=narrow_refs)
 
     def scan(self, tm: TriplesMap) -> DataFrame:
-        key = ("stream",) + tm.source.cache_key()
-        with self._compile_lock:   # compile_all's TM thread pool
-            if key not in self._scan_cache:
-                self._scan_cache[key] = stream_scan(self.spark, tm.source)
-            return self._scan_cache[key]
+        return self._once(("stream", tm.source.cache_key()),
+                          lambda: stream_scan(self.spark, tm.source))
 
     def parent_scan(self, tm: TriplesMap) -> DataFrame:
-        # build sides stay batch: stream-static join, no state on the
-        # parent, and the planner's broadcast/persist logic still applies
-        key = tm.source.cache_key()
-        with self._compile_lock:
-            if key not in self._scan_cache:
-                self._scan_cache[key] = read_source(self.spark, tm.source)
-            return self._scan_cache[key]
+        # build sides stay batch — stream-static join, no state on the
+        # parent — and read as the batch scan does (validate_csv,
+        # input_dedup, XML parent-axis refs); the planner's
+        # broadcast/persist logic still applies
+        return MappingPlanner.scan(self, tm)
 
 
 def materialize_stream(
@@ -156,7 +151,7 @@ def materialize_stream(
         spark, mapping_text, base_dir,
         options or Options(remove_duplicates=False),
         planner_cls=StreamingMappingPlanner, **opts)
-    return planner.compile_all()
+    return without_rule(planner, planner.compile_all())
 
 
 def run_available_now(

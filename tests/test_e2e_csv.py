@@ -166,12 +166,14 @@ def test_materialize_incremental_emits_only_delta(spark, tmp_path):
 def test_multi_dataset_all_in_one_file(spark, tmp_path):
     """number_of_datasets=2 + all_in_one_file: union of both datasets,
     cross-dataset duplicates collapsed, one output.nt. With
-    dedup_scope=spo the merge collapses the same triple across graphs,
-    as each dataset's own dedup does."""
+    dedup_scope=spo or reference the merge collapses the same triple
+    across graphs, as each dataset's own dedup does."""
     from sdm_rdfizer_spark import semantify
 
     for scope, graphs in (("spog", ("", "")),
-                          ("spo", ("; rr:graph ex:g1", "; rr:graph ex:g2"))):
+                          ("spo", ("; rr:graph ex:g1", "; rr:graph ex:g2")),
+                          ("reference",
+                           ("; rr:graph ex:g1", "; rr:graph ex:g2"))):
         d = tmp_path / scope
         d.mkdir()
         (d / "a.csv").write_text("id,v\n1,x\n")

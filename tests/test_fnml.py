@@ -200,3 +200,35 @@ def test_subject_condition_row_filter(spark, tmp_path):
         ("<http://x.org/p/1>", "<http://x.org/name>", '"Ada Lovelace"'),
         ("<http://x.org/p/2>", "<http://x.org/name>", '"Alan Turing"'),
     }
+
+
+def test_function_subject_parent_joins(spark, tmp_path):
+    """A parent TriplesMap whose subject map is a function is joined
+    like a template one: across sources on a join condition, and as a
+    projection over the same source."""
+    _write_people(tmp_path)
+    (tmp_path / "orders.csv").write_text("oid,who\n10,1\n11,3\n")
+    m = PFX + textwrap.dedent(f"""
+        <#P> a rr:TriplesMap;
+          rml:logicalSource [ rml:source "{tmp_path}/people.csv"; rml:referenceFormulation ql:CSV ];
+          rr:subjectMap [ fnml:functionValue [
+            rr:predicateObjectMap [ rr:predicate fno:executes; rr:object grel:toLowerCase ];
+            rr:predicateObjectMap [ rr:predicate grel:valueParam; rr:objectMap [ rr:template "http://x.org/P/{{pid}}" ] ] ] ] .
+        <#O> a rr:TriplesMap;
+          rml:logicalSource [ rml:source "{tmp_path}/orders.csv"; rml:referenceFormulation ql:CSV ];
+          rr:subjectMap [ rr:template "http://x.org/o/{{oid}}" ];
+          rr:predicateObjectMap [ rr:predicate ex:by; rr:objectMap [ rr:parentTriplesMap <#P>;
+            rr:joinCondition [ rr:child "who"; rr:parent "pid" ] ] ] .
+        <#Q> a rr:TriplesMap;
+          rml:logicalSource [ rml:source "{tmp_path}/people.csv"; rml:referenceFormulation ql:CSV ];
+          rr:subjectMap [ rr:template "http://x.org/q/{{pid}}" ];
+          rr:predicateObjectMap [ rr:predicate ex:same; rr:objectMap [ rr:parentTriplesMap <#P> ] ] .
+    """)
+    got = triple_set(materialize(spark, m))
+    assert got == {
+        ("<http://x.org/o/10>", "<http://x.org/by>", "<http://x.org/p/1>"),
+        ("<http://x.org/o/11>", "<http://x.org/by>", "<http://x.org/p/3>"),
+        ("<http://x.org/q/1>", "<http://x.org/same>", "<http://x.org/p/1>"),
+        ("<http://x.org/q/2>", "<http://x.org/same>", "<http://x.org/p/2>"),
+        ("<http://x.org/q/3>", "<http://x.org/same>", "<http://x.org/p/3>"),
+    }

@@ -62,6 +62,21 @@ def test_stream_matches_batch_with_join(spark, csv_dir, tmp_path):
     assert len(triple_set(out)) > 0
 
 
+def test_validate_csv_fails_on_static_parent(spark, tmp_path):
+    """validate_csv reads CSV sources FAILFAST: a row with more fields
+    than its header fails the run. A stream's static join parent is
+    read like the batch scan, so the drain fails on it too."""
+    (tmp_path / "s1.csv").write_text("enst,biotype\nE1,coding\nE2,lnc\n")
+    (tmp_path / "s2.csv").write_text("tx,chr\nE1,chr1\nE2,chrX,extra\n")
+    mapping = MAPPING % {"dir": str(tmp_path)}
+    with pytest.raises(Exception, match="(?i)malformed"):
+        materialize(spark, mapping, validate_csv=True).collect()
+    with pytest.raises(Exception, match="(?i)malformed"):
+        sdf = materialize_stream(spark, mapping, validate_csv=True)
+        run_available_now(sdf, name="t_stream_validate_parent",
+                          checkpoint_dir=str(tmp_path / "ckpt")).collect()
+
+
 def test_windowed_event_stats_stream_matches_batch(spark):
     from sdm_rdfizer_spark.sources import read_parquet
     from sdm_rdfizer_spark.streaming import stream_events_window

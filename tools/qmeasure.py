@@ -2,9 +2,9 @@
 
 For each named query: build the DataFrame, dump ``explain("formatted")``
 to ``plans/<tag>/<name>_<suffix>.txt``, then time N noop-sink
-materializations (guide §1.4) and print per-run seconds. Timing
-methodology matches bench.py (same session knobs, same noop sink, same
-cache release between runs) so numbers are comparable to sweep rows.
+materializations (guide §1.4) and print per-run seconds. The session,
+warm-up, calibration and cache release between runs are bench.py's own
+functions, so numbers are comparable to sweep rows.
 
 Usage:
   python tools/qmeasure.py [--plans-dir plans/r10] [--suffix before]
@@ -42,48 +42,14 @@ def main() -> int:
         else:
             names.append(a); i += 1
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
+    from bench import calibrate, measure_session, release, warm_up
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("qmeasure")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.driver.extraJavaOptions",
-                "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=1g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from sdm_rdfizer_spark.engine import tune_session
-
-    tune_session(spark)
+    spark = measure_session("qmeasure", cpus)
     import __spark_entry__ as entry_mod
 
-    # same warmup as bench.py
-    spark.range(0, 1_000_000, 1, 8).agg(F.sum("id")).collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").write.format("noop") \
-        .mode("overwrite").save()
-
-    def _warm(batches):
-        for b in batches:
-            yield b
-    spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(_warm, "id long") \
-        .write.format("noop").mode("overwrite").save()
-
-    t0 = time.perf_counter()
-    (spark.range(0, 100_000_000, 1, 32)
-     .groupBy((F.col("id") % 4096).alias("k"))
-     .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
-     .orderBy("k").write.format("noop").mode("overwrite").save())
-    print(f"[qmeasure] calibration {time.perf_counter() - t0:.2f}s",
-          flush=True)
+    warm_up(spark, sf_dir, cpus)
+    print(f"[qmeasure] calibration {calibrate(spark):.2f}s", flush=True)
 
     qs = entry_mod.queries()
     for name in names:
@@ -101,9 +67,7 @@ def main() -> int:
             spark.sparkContext.setJobDescription(f"{name} run{r}")
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist()
+            release(spark)
             spark.sparkContext.setJobDescription(None)
         print(f"[qmeasure] {name}: " +
               " ".join(f"{t:.2f}" for t in times) +
