@@ -231,7 +231,7 @@ def _materialize_tagged(spark, mapping_text, base_dir, options, **opts):
         return planner, raw, {}
 
     if len(targets) > 1 or any(tm.poms for tm in planner.tms):
-        raw = raw.persist()
+        raw = planner.persist(raw)
 
     def finish(df):
         if planner.opts.remove_duplicates:
@@ -253,6 +253,7 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
     spark = spark or default_session()
     results: dict[str, DataFrame] = {}
     tagged: list[DataFrame] = []   # with __rule, for the merge below
+    planners: list[MappingPlanner] = []   # their cached frames, released
     os.makedirs(cfg.output_folder, exist_ok=True)
     for ds in cfg.datasets:
         with open(ds.mapping_path, encoding="utf-8") as f:
@@ -260,6 +261,7 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
         planner, main, target_frames = _materialize_tagged(
             spark, text, os.path.dirname(os.path.abspath(ds.mapping_path)),
             cfg)
+        planners.append(planner)
         triples = without_rule(planner, main)
         results[ds.name] = triples
         tagged.append(main)
@@ -289,6 +291,7 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
 
         if not cfg.all_in_one_file:
             _write_out(triples, cfg.output_folder, ds.name, cfg.output_format)
+            planner.release()
 
     if cfg.all_in_one_file and results:
         # reference: every dataset appended into one output file
@@ -299,6 +302,8 @@ def semantify(config, spark: SparkSession | None = None) -> dict[str, DataFrame]
             merged = dedup_triples(merged, cfg.dedup_scope)
         _write_out(without_rule(planner, merged), cfg.output_folder,
                    "output", cfg.output_format)
+        for p in planners:
+            p.release()
     return results
 
 

@@ -23,6 +23,7 @@ import os
 import time
 from dataclasses import replace
 
+from pyspark.errors.exceptions.captured import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -218,7 +219,20 @@ def run_available_now(
     with scoped_conf(spark,
                      {"spark.sql.shuffle.partitions": str(state_parts)}):
         q = writer.start()
-        q.awaitTermination()
+        try:
+            q.awaitTermination()
+        except StreamingQueryException as e:
+            # the query's message names only the stage or file that
+            # failed; the root cause (say, a malformed record under
+            # validate_csv) is what the caller can act on
+            root = e._origin
+            if root is None:
+                raise
+            while root.getCause() is not None:
+                root = root.getCause()
+            raise StreamingQueryException(
+                desc=f"{e}\nRoot cause: {root.toString()}",
+                stackTrace="") from e
     return spark.table(name)
 
 

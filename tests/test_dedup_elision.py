@@ -261,8 +261,10 @@ def test_elision_with_fused_n1_join(spark, tmp_path):
 
 
 def test_no_elision_with_nm_join(spark, tmp_path):
-    # duplicate parent keys ⇒ the join is 1:N (branch plan) and the
-    # child TM keeps its distinct
+    # duplicate parent keys ⇒ the join is 1:N: the child reads the
+    # parent's grouped table, whose terms per key are distinct, so its
+    # unique subjects still prove it duplicate-free and its distinct is
+    # elided — the one shuffle left is the grouping
     import pyarrow as pa
     import pyarrow.parquet as pq
     pq.write_table(pa.table({"id": [1, 2], "fk": [10, 10]}),
@@ -281,7 +283,8 @@ def test_no_elision_with_nm_join(spark, tmp_path):
   rr:subjectMap [ rr:template "http://ex.org/p/{{lbl}}" ] .
 """
     df = materialize(spark, m)
-    assert _shuffles(df) >= 1
+    assert _shuffles(df) == 1, _plan(df)
+    assert _shuffles(materialize(spark, m, dedup_elision=False)) == 2
     # each child matches both parents: 1:N multiplicity preserved
     assert df.count() == 4
 
@@ -379,8 +382,9 @@ def test_narrow_refused_on_trim_unstable_values(spark, tmp_path, narrow_always):
     assert df.where(F.col("p") == "<http://ex.org/name>").count() == 1
 
 
-def test_narrow_refused_on_join_pom(spark, tmp_path, narrow_always):
-    # a 1:N parent join changes row multiplicity — out of narrow scope
+def test_narrow_covers_grouped_join_pom(spark, tmp_path, narrow_always):
+    # a 1:N parent join rides the explode pass (one entry per matched
+    # parent term), and the rendered objects are in the narrow key
     import pyarrow as pa
     import pyarrow.parquet as pq
     pq.write_table(pa.table({"id": [1, 1], "fk": [10, 10]}),
@@ -399,7 +403,7 @@ def test_narrow_refused_on_join_pom(spark, tmp_path, narrow_always):
   rr:subjectMap [ rr:template "http://ex.org/p/{{lbl}}" ] .
 """
     df = materialize(spark, m)
-    assert not _narrow_fired(df), _plan(df)
+    assert _narrow_fired(df), _plan(df)
     # both duplicate child rows join both parents; dedup collapses to 2
     assert df.count() == 2
 

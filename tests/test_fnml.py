@@ -232,3 +232,37 @@ def test_function_subject_parent_joins(spark, tmp_path):
         ("<http://x.org/q/2>", "<http://x.org/same>", "<http://x.org/p/2>"),
         ("<http://x.org/q/3>", "<http://x.org/same>", "<http://x.org/p/3>"),
     }
+
+
+def test_function_graph_map_and_gather_on_function_subject(spark, tmp_path):
+    """A subject graph map that is a function, and a gather POM on a TM
+    whose subject is a function: both resolve the TM's function maps."""
+    _write_people(tmp_path)
+    lower = ("fnml:functionValue [ rr:predicateObjectMap [ rr:predicate "
+             "fno:executes; rr:object grel:toLowerCase ]; "
+             "rr:predicateObjectMap [ rr:predicate grel:valueParam; "
+             "rr:objectMap [ rr:template \"http://x.org/{0}/{{{1}}}\" ] ] ]")
+    m = PFX + textwrap.dedent(f"""
+        @prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .
+        <#G> a rr:TriplesMap;
+          rml:logicalSource [ rml:source "{tmp_path}/people.csv"; rml:referenceFormulation ql:CSV ];
+          rr:subjectMap [ rr:template "http://x.org/p/{{pid}}";
+                          rr:graphMap [ {lower.format("G", "city")} ] ];
+          rr:predicateObjectMap [ rr:predicate ex:name; rr:objectMap [ rml:reference "name" ] ] .
+        <#L> a rr:TriplesMap;
+          rml:logicalSource [ rml:source "{tmp_path}/people.csv"; rml:referenceFormulation ql:CSV ];
+          rr:subjectMap [ {lower.format("Q", "pid")} ];
+          rr:predicateObjectMap [ rr:predicate ex:tags; rr:objectMap [
+            rml:gather ( [ rml:reference "name" ] [ rml:reference "city" ] );
+            rml:gatherAs rdf:Seq ] ] .
+    """)
+    rows = {tuple(r) for r in materialize(spark, m)
+            .select("s", "p", "o", "g").collect()}
+    assert ("<http://x.org/p/3>", "<http://x.org/name>", '"Grace Hopper"',
+            "<http://x.org/g/nyc>") in rows
+    nodes = {o for s, p, o, _ in rows
+             if s == "<http://x.org/q/1>" and p == "<http://x.org/tags>"}
+    assert len(nodes) == 1
+    seq = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#_{}>"
+    assert {(p, o) for s, p, o, _ in rows if s in nodes} >= {
+        (seq.format(1), '"Ada Lovelace"'), (seq.format(2), '"London"')}

@@ -1,12 +1,12 @@
 """Parent-side joins (MappingPlanner._join_table) against a DuckDB join
 over the same CSV files.
 
-One mapping covers every consumer of a join table: a referencing object
-map (fused as an N:1 left join when the parent keys turn out unique,
-else a 1-N branch), a quoted object with a join, a quoted subject with
-a join and a gather parent item. Keys are small integers with
-duplicates, plus empty, ``NULL`` and whitespace values, which never
-join."""
+One mapping covers every consumer of a join table: referencing object
+maps (folded into the child's explode pass as a left join against the
+parent's terms grouped per key, two of them on different keys), a
+quoted object with a join, a quoted subject with a join and a gather
+parent item. Keys are small integers with duplicates, plus empty,
+``NULL`` and whitespace values, which never join."""
 
 import itertools
 import os
@@ -22,7 +22,7 @@ KEYS = ("1", "2", "3", "", "NULL", " ")
 NAMES = ("a", "b", "c", "")
 
 _parent = st.tuples(st.sampled_from(KEYS), st.sampled_from(NAMES))
-_child = st.tuples(st.sampled_from(("x", "y", "z")), st.sampled_from(KEYS))
+_child = st.tuples(st.sampled_from(("x", "y", "a")), st.sampled_from(KEYS))
 _counter = itertools.count()
 
 MAPPING = """
@@ -40,6 +40,9 @@ MAPPING = """
   rr:predicateObjectMap [ rr:predicate ex:ref; rr:objectMap [
       rr:parentTriplesMap <#P>;
       rr:joinCondition [ rr:child "k"; rr:parent "k" ] ] ];
+  rr:predicateObjectMap [ rr:predicate ex:named; rr:objectMap [
+      rr:parentTriplesMap <#R>;
+      rr:joinCondition [ rr:child "c"; rr:parent "n" ] ] ];
   rr:predicateObjectMap [ rr:predicate ex:quo; rr:objectMap [
       rml:quotedTriplesMap <#Q>;
       rr:joinCondition [ rr:child "k"; rr:parent "k" ] ] ];
@@ -56,6 +59,9 @@ MAPPING = """
 <#P> a rr:TriplesMap;
   rml:logicalSource [ rml:source "{parent}"; rml:referenceFormulation ql:CSV ];
   rr:subjectMap [ rr:template "http://ex.org/p/{{n}}" ] .
+<#R> a rr:TriplesMap;
+  rml:logicalSource [ rml:source "{parent}"; rml:referenceFormulation ql:CSV ];
+  rr:subjectMap [ rr:template "http://ex.org/r/{{k}}" ] .
 <#Q> a rml:NonAssertedTriplesMap;
   rml:logicalSource [ rml:source "{parent}"; rml:referenceFormulation ql:CSV ];
   rr:subjectMap [ rr:template "http://ex.org/p/{{n}}" ];
@@ -73,7 +79,7 @@ def _write(path, header, rows):
 
 
 def _expected(parent, child):
-    """DuckDB: the multiset of key/ref/quo/val triples and the set of
+    """DuckDB: the multiset of key/ref/named/quo/val triples and the set of
     (child subject, gathered members) over the same files."""
     con = duckdb.connect()
     for name, path in (("p", parent), ("c", child)):
@@ -91,6 +97,12 @@ def _expected(parent, child):
         triples[(cs, "<http://ex.org/ref>", po)] += 1
         triples[(cs, "<http://ex.org/quo>", quoted)] += 1
         triples[(quoted, "<http://ex.org/val>", f'"{c}"')] += 1
+    for c, k in con.execute(
+            "SELECT c.c, r.k FROM c JOIN (SELECT DISTINCT n, k FROM p WHERE "
+            + VALID.format("n") + " AND " + VALID.format("k")
+            + ") r ON c.c = r.n").fetchall():
+        triples[(f"<http://ex.org/c/{c}>", "<http://ex.org/named>",
+                 f"<http://ex.org/r/{k}>")] += 1
     # one per child row: a join fused into the child's own pass must
     # not multiply its rows
     for c, k in con.execute("SELECT c, k FROM c WHERE "
@@ -131,9 +143,12 @@ _CHILD = [("x", "1"), ("y", "2"), ("z", "3"), ("x", ""), ("y", "NULL"),
 
 
 # pinned: a 1-N join over duplicate rows; unique keys over duplicate
-# rows (N:1 once the pairs are distinct); unique digit keys, where the
-# raw-key probe skips the dedup
+# rows (N:1 once grouped); unique digit keys, where the raw-key probe
+# skips the grouping; a unique-subject child whose joins match several
+# parents per row
 @example(parent=_ROWS, child=_CHILD, unique=False, dup=True)
+@example(parent=[("1", "a"), ("1", "b"), ("2", "a"), ("3", "b")],
+         child=[("x", "1"), ("y", "2"), ("a", "1")], unique=False, dup=False)
 @example(parent=_ROWS, child=_CHILD, unique=True, dup=True)
 @example(parent=[("1", "a"), ("2", "b"), ("3", "")],
          child=[("x", "1"), ("y", "1"), ("z", "3")], unique=True, dup=False)

@@ -327,6 +327,22 @@ def test_gtfs_files_matches_tabular_shape(spark, entry):
     assert plans["rml_gtfs_files"][0] <= 3
 
 
+def test_fold_tags_deterministic(spark, entry):
+    """Two compiles of one mapping give the same optimized plan text
+    once expression ids are normalized: the folded joins' column tags
+    come from each POM's position in its TriplesMap, not from the order
+    the compile threads reach them."""
+    import re
+
+    def text(q):
+        df = entry.queries()[q](spark, SF)
+        return re.sub(r"#\d+", "#", df._jdf.queryExecution()
+                      .optimizedPlan().toString())
+
+    for q in ("rml_gtfs_tabular", "rml_gtfs_composite", "rml_gtfs_files"):
+        assert text(q) == text(q), q
+
+
 def test_source_matrix_label_rides_existing_shuffles(spark, entry):
     """dedup_source_matrix threads the source label through the
     signature/band pipeline via carry_cols, so the ONLY join in the plan

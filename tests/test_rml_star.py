@@ -164,7 +164,11 @@ infer_datatypes: yes
 name: combo
 mapping: {tmp_path}/m.ttl
 """)
+    spark.catalog.clearCache()
     engine.semantify(str(tmp_path / "config.ini"), spark)
+    # the run released what it cached (the tagged triples the target
+    # and the main output both read)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     main = open(out / "combo.nt").read()
     q = ('<< <http://x.org/fact/f1> <http://x.org/value> '
          '"10"^^<http://www.w3.org/2001/XMLSchema#integer> >>')
