@@ -23,8 +23,9 @@ Blank-node determinism: the reference mints uuid4-per-collection
 (cc_functions.py:218), which is non-reproducible and breaks distributed
 retries; we derive node ids from md5(subject || predicate || items) so
 re-executed tasks emit identical triples (SURVEY §7 hard part c). Joined
-parent items are array_sort-ed (the reference's dict order is source-row
-order — RML-CC leaves cross-row item order undefined; pass
+parent items come sorted (``sort_array`` over the join table's
+``collect_set``; the reference's dict order is source-row order —
+RML-CC leaves cross-row item order undefined; pass
 ``gather_row_order="source"`` for reference-ordered grouped items).
 """
 

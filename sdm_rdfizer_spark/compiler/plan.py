@@ -3,10 +3,10 @@
 This replaces the reference's execution loop (reference:
 rdfizer/rdfizer/semantify.py:9957-15037 — per-source row-at-a-time
 executors) with a compiler that emits one declarative DataFrame plan per
-TriplesMap — or one per logical source for the projection-only
-TriplesMaps that share it — and unions them into the dataset. Catalyst
-then handles column pruning, predicate pushdown, join strategy
-(broadcast vs sort-merge via AQE) and whole-stage codegen.
+TriplesMap — or one per (logical source, dedup verdict) for the
+projection-only TriplesMaps that share it — and unions them into the
+dataset. Catalyst then handles column pruning, predicate pushdown, join
+strategy (broadcast vs sort-merge via AQE) and whole-stage codegen.
 
 Compile-time rewrites carried over from the reference because Catalyst
 cannot see RML semantics:
@@ -365,8 +365,10 @@ class MappingPlanner:
         # scan/parent subplan twice (the shared-subplan design is what
         # the plan census and the persist() reuse depend on).
         self._compile_lock = threading.RLock()
+        # tm_id → index of its compile unit, set by compile_all before
+        # any scan is built (``_json_scan`` counts one reader per unit)
+        self._unit_of: dict[str, int] = {}
         self._count_parent_refs()
-        self._fusion = self._fusion_groups()
 
     # ------------------------------------------------------------------
     def _resolve_tm(self, tm_id: str, context: str) -> TriplesMap:
@@ -491,14 +493,16 @@ class MappingPlanner:
 
         def build():
             base = json_base(self.spark, src)
-            # count the plan passes that read this document: a fused
-            # logical-source group is ONE reader, every other TM one
-            # each. Sharers are matched by their STAGED path (ADVICE r10
-            # #2 — an http(s) source never equals its raw URL), computed
-            # without I/O: counting must neither download another TM's
-            # document nor fail on an unreachable one
+            # count the plan passes that read this document: each
+            # compile unit (``_decide``) is ONE pass, and a TM outside
+            # every unit (non-asserted, or compiled by a direct
+            # ``compile_tm``) one reader of its own. Sharers are matched
+            # by their STAGED path (ADVICE r10 #2 — an http(s) source
+            # never equals its raw URL), computed without I/O: counting
+            # must neither download another TM's document nor fail on
+            # an unreachable one
             n_readers = len({
-                self._fusion.get(t.tm_id, t.tm_id) for t in self.tms
+                self._unit_of.get(t.tm_id, t.tm_id) for t in self.tms
                 if t.source.fmt == "json"
                 and staged_path(str(t.source.source)) == src})
             nbytes = source_bytes(src)
@@ -648,147 +652,121 @@ class MappingPlanner:
                 return False
         return True
 
-    def _fusion_groups(self) -> dict[str, tuple]:
-        """tm_id → logical-source key of every asserted single-pass TM
-        that shares its source with another one; compile_all fuses each
-        such group into one pass."""
-        by_key: dict[tuple, list[str]] = {}
-        for tm in self.tms:
-            if tm.kind != "NonAssertedTriplesMap" and self._single_pass(tm):
-                by_key.setdefault(tm.source.cache_key(), []).append(tm.tm_id)
-        return {t: k for k, ids in by_key.items() if len(ids) > 1
-                for t in ids}
+    def _decide(self) -> list[tuple]:
+        """``compile_all``'s compile units in union order, decided before
+        any Column is built: ``(member TMs, verdict, narrow refs)``. The
+        verdict is the distinct the unit gets:
+
+        * ``free``: none — its output is proved duplicate-free, or no
+          dedup is asked for (``remove_duplicates`` off, or targets
+          collected: the caller dedups per output);
+        * ``distinct``: its own rendered distinct;
+        * ``narrow``: a distinct below rendering, keyed on the subject
+          refs (``_tm_narrow_ok``);
+        * ``global``: dedup elision does not apply, so the union gets
+          one ``dedup_triples``.
+
+        The single-pass TMs (``_single_pass``) of one logical source and
+        verdict form one unit: one scan and one explode, placed where
+        the source's first such TM stood (the reference likewise groups
+        TriplesMaps by source and loads each source once,
+        functions.py:651-995, files_sort). A narrow TM, and every TM
+        with a join to another source, a gather or a quoted subject, is
+        a unit of its own."""
+        asserted = [tm for tm in self.tms if tm.kind != "NonAssertedTriplesMap"]
+
+        def verdict(tm: TriplesMap) -> tuple:
+            if self._tm_dup_free(tm):
+                return "free", None
+            refs = self._tm_narrow_ok(tm)
+            return ("distinct", None) if refs is None else ("narrow", refs)
+
+        if not self.opts.remove_duplicates or self.collect_targets:
+            verdicts = [("free", None)] * len(asserted)
+        elif (self.opts.dedup_elision and self.opts.dedup_scope == "spog"
+                and self._cross_tm_disjoint(asserted)):
+            # dedup elision: when no two TriplesMaps can emit the same
+            # triple (disjoint predicate/class constants), the global
+            # distinct factors into per-TM distincts — and a TM PROVED
+            # duplicate-free (unique subject key, injective template,
+            # pairwise-distinct constant predicates) skips its distinct
+            # entirely. For a wide projection mapping over a keyed fact
+            # table this removes the plan's ONLY shuffle — the dominant
+            # cost of materialization at scale. (The reference's own
+            # benchmarks show the same effect from the other side: its
+            # duplicate-rate track speeds UP as duplicates rise because
+            # dedup prunes work — here dedup of provably-distinct output
+            # is pure overhead.) The per-TM proof is a driver-side DuckDB
+            # probe of the source (uniqueness + value hazards), each on
+            # its own connection; the shared probe cache is a GIL-safe
+            # dict (a racing duplicate probe writes the same verdict)
+            verdicts = self._pooled(verdict, asserted)
+        else:
+            verdicts = [("global", None)] * len(asserted)
+        # source → verdict → unit; a TM that is not single-pass, or is
+        # narrow, keys a unit of its own
+        slots: dict = {}
+        for tm, (v, refs) in zip(asserted, verdicts):
+            slot = slots.setdefault(
+                tm.source.cache_key() if self._single_pass(tm) else tm.tm_id,
+                {})
+            key = (v, tm.tm_id if refs else None)
+            slot.setdefault(key, ([], v, refs))[0].append(tm)
+        return [unit for slot in slots.values() for unit in slot.values()]
+
+    @staticmethod
+    def _pooled(fn, items: list) -> list:
+        """``[fn(x) for x in items]`` from a small thread pool, in order.
+
+        Building Column trees is one py4j socket round trip PER
+        OPERATION, so a multi-TM compile is ~75% driver-side socket wait
+        (profiled: 14k round trips, 3 s, for a 10-TM mapping), and the
+        dedup probes are DuckDB scans; independent items overlap that
+        latency. The planner's shared caches are serialized behind
+        ``_compile_lock``, so every shared subplan (scans, join tables,
+        probes) is still built exactly once and the emitted plan is the
+        serial compile's. A single item runs in the pool too: on a
+        thread with an active session (the caller's), PySpark wraps
+        every Column function in a call-site capture that costs five
+        more round trips (getActiveSession, isDefined, conf get, origin
+        set/clear); pool threads have no active session."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(8, len(items) or 1)) as pool:
+            return list(pool.map(fn, items))
 
     def compile_all(self) -> DataFrame:
-        """Union of all asserted TriplesMap outputs (+ global dedup).
+        """Union of all asserted TriplesMap outputs (+ dedup).
 
-        One scan and one explode per logical source: the single-pass TMs
-        (``_single_pass``) that share a source compile their terms into
-        one shared ExprLayers (``_tm_pass``) and are emitted as ONE pass
-        (``_emit_fused``) — the reference likewise groups TriplesMaps by
-        source and loads each source once (functions.py:651-995,
-        files_sort). Every other TM keeps its own plan (``compile_tm``).
+        Decide, then emit: ``_decide`` fixes every compile unit and its
+        dedup verdict, then each unit compiles once (``_emit_unit``), so
+        every TriplesMap is compiled by exactly one ``_tm_pass``.
 
         Dedup is one shuffle-based ``dropDuplicates`` over the union — the
         distributed equivalent of the reference's PTT/DTT in-memory dedup
         tables (semantify.py:53-54, 6580-6605); eviction/compression
         (semantify.py:212-265) are unnecessary because the shuffle spills.
-        Under dedup_scope "reference" the triples keep their ``__rule``
-        column, so a caller can merge outputs under the same keying; the
-        engine's entry points drop it.
+        Under dedup elision it factors into the units' own distincts: the
+        TMs are pairwise disjoint, so the distinct of a fused group's
+        union is the union of its TMs' distincts. Under dedup_scope
+        "reference" the triples keep their ``__rule`` column, so a caller
+        can merge outputs under the same keying; the engine's entry
+        points drop it.
         """
-        asserted = [tm for tm in self.tms if tm.kind != "NonAssertedTriplesMap"]
-        # compile units: [tm] for a TM with its own plan, the member list
-        # for a fused group (at its first member's position)
-        units: list[list[TriplesMap]] = []
-        groups: dict[tuple, list[TriplesMap]] = {}
-        for tm in asserted:
-            key = self._fusion.get(tm.tm_id)
-            if key is None:
-                units.append([tm])
-            elif key in groups:
-                groups[key].append(tm)
-            else:
-                groups[key] = [tm]
-                units.append(groups[key])
-
-        def compile_unit(tms: list[TriplesMap]) -> list:
-            if tms[0].tm_id not in self._fusion:
-                return [self.compile_tm(tms[0])]
-            # a group compiles its members in order into ONE ExprLayers:
-            # deterministic layer names, so the expression trees memoized
-            # on them (terms._TREE_MEMO) are hit again by the next compile
-            layers = ExprLayers()
-            passes = [self._tm_pass(tm, layers) for tm in tms]
-            return [tp if tp is not None and tp.entries else None
-                    for tp in passes]
-
-        # Compile TMs from a thread pool: building Column trees is one
-        # py4j socket round trip PER OPERATION, so a multi-TM compile is
-        # ~75% driver-side socket wait (profiled: 14k round trips, 3 s,
-        # for a 10-TM mapping). Independent units overlap that latency;
-        # the planner's shared caches are serialized behind
-        # _compile_lock, so every shared subplan (scans, join tables,
-        # probes) is still built exactly once and the
-        # emitted plan is the same as the serial compile's. Order is
-        # preserved by pool.map. A single unit compiles in the pool too:
-        # on a thread with an active session (the caller's), PySpark
-        # wraps every Column function in a call-site capture that costs
-        # five more round trips (getActiveSession, isDefined, conf get,
-        # origin set/clear); pool threads have no active session.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(units) or 1)) as pool:
-            compiled = list(pool.map(compile_unit, units))
-        parts_by_tm = [
-            (tm, part) for tms, parts in zip(units, compiled)
-            for tm, part in zip(tms, parts) if part is not None
-        ]
-        if not parts_by_tm:
+        units = self._decide()
+        self._unit_of = {tm.tm_id: i for i, (tms, _, _) in enumerate(units)
+                         for tm in tms}
+        parts = [dedup_triples(df, "spog") if v == "distinct" else df
+                 for df, (_, v, _) in zip(self._pooled(self._emit_unit, units),
+                                          units)
+                 if df is not None]
+        if not parts:
             schema = "s string, p string, o string, g string"
             if self.track_rules:
                 schema += ", __rule string"
             return self.spark.createDataFrame([], schema)
-
-        if (self.opts.remove_duplicates and not self.collect_targets
-                and self.opts.dedup_elision and self.opts.dedup_scope == "spog"
-                and self._cross_tm_disjoint([tm for tm, _ in parts_by_tm])):
-            # dedup elision: when no two TriplesMaps can emit the same
-            # triple (disjoint predicate/class constants), the global
-            # distinct factors into per-TM distincts — and a TM whose
-            # branches are PROVED duplicate-free (unique subject key,
-            # injective template, pairwise-distinct constant predicates)
-            # skips its distinct entirely. For a wide projection mapping
-            # over a keyed fact table this removes the plan's ONLY
-            # shuffle — the dominant cost of materialization at scale.
-            # (The reference's own benchmarks show the same effect from
-            # the other side: its duplicate-rate track speeds UP as
-            # duplicates rise because dedup prunes work — here dedup of
-            # provably-distinct output is pure overhead.)
-            # the per-TM proof = a driver-side DuckDB probe of the
-            # source (uniqueness + value hazards); independent TMs
-            # probe from the same pool the compile used — the probes
-            # are each their own DuckDB connection and the shared
-            # probe cache is a GIL-safe dict (a racing duplicate probe
-            # writes the same verdict)
-            def _decide(tm):
-                if self._tm_dup_free(tm):
-                    return ("free", None)
-                return ("narrow", self._tm_narrow_ok(tm))
-
-            if len(parts_by_tm) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                        max_workers=min(8, len(parts_by_tm))) as pool:
-                    decisions = list(pool.map(
-                        lambda t: _decide(t[0]), parts_by_tm))
-            else:
-                decisions = [_decide(tm) for tm, _ in parts_by_tm]
-            units = []   # (compiled TM, needs its distinct)
-            for (tm, part), (kind, nrefs) in zip(parts_by_tm, decisions):
-                if nrefs is not None:
-                    # dedup below rendering: recompile this TM with the
-                    # distinct keyed on (raw subject refs, entry index,
-                    # rendered object) — same triple set, ~4× fewer
-                    # bytes through the plan's dominant shuffle
-                    npart = self.compile_tm(tm, narrow_refs=nrefs)
-                    if npart is not None:
-                        units.append((npart, False))
-                        continue
-                units.append((part, kind != "free"))
-            # the TMs are pairwise disjoint, so the distinct of a fused
-            # group's union is the union of its TMs' distincts
-            deduped = [dedup_triples(df, "spog") if distinct else df
-                       for df, distinct in self._fuse_units(units)]
-            return reduce(DataFrame.union, deduped)
-
-        parts = [df for df, _ in
-                 self._fuse_units([(p, False) for _, p in parts_by_tm])]
         out = reduce(DataFrame.union, parts)
-        if self.opts.remove_duplicates and not self.collect_targets:
-            # with target tracking the caller dedups per output (the
-            # target column would otherwise make equal triples distinct).
+        if units[0][1] == "global":
             # dedup_scope "spo" collapses the same triple across named
             # graphs (the reference's PTT keys ignore the graph term);
             # default "spog" keeps one per graph; "reference" reproduces
@@ -801,23 +779,24 @@ class MappingPlanner:
             out = dedup_triples(out, self.opts.dedup_scope)
         return out
 
-    def _fuse_units(self, units: list) -> list:
-        """(DataFrame | _TMPass, flag) units → (DataFrame, flag) union
-        parts: passes with the same logical source and flag become one
-        fused part, placed where the group's first pass stood."""
-        slots: list = []
-        groups: dict[tuple, list] = {}
-        for unit, flag in units:
-            if not isinstance(unit, _TMPass):
-                slots.append((unit, flag))
-                continue
-            key = (unit.tm.source.cache_key(), flag)
-            if key not in groups:
-                groups[key] = []
-                slots.append((groups[key], flag))
-            groups[key].append(unit)
-        return [(self._emit_fused(u) if isinstance(u, list) else u, flag)
-                for u, flag in slots]
+    def _emit_unit(self, unit: tuple) -> DataFrame | None:
+        """One compile unit (see ``_decide``) → its triples, or None when
+        it emits nothing: a narrow TM through ``_emit_tm`` with its
+        subject refs, a single TM through ``compile_tm``, a fused group
+        through ``_emit_fused``. A group compiles its members in order
+        into ONE ExprLayers: deterministic layer names, so the expression
+        trees memoized on them (terms._TREE_MEMO) are hit again by the
+        next compile."""
+        tms, _, refs = unit
+        if refs is not None:
+            tp = self._tm_pass(tms[0], ExprLayers())
+            return None if tp is None else self._emit_tm(tp, refs)
+        if len(tms) == 1:
+            return self.compile_tm(tms[0])
+        layers = ExprLayers()
+        passes = [tp for tp in (self._tm_pass(tm, layers) for tm in tms)
+                  if tp is not None and tp.entries]
+        return self._emit_fused(passes) if passes else None
 
     # ------------------------------------------------------------------
     # dedup elision (see compile_all): static proof + bounded probe that
@@ -1177,8 +1156,7 @@ class MappingPlanner:
             return False
 
     # ------------------------------------------------------------------
-    def compile_tm(self, tm: TriplesMap,
-                   narrow_refs: list[str] | None = None) -> DataFrame:
+    def compile_tm(self, tm: TriplesMap) -> DataFrame:
         """One TriplesMap → triples DataFrame.
 
         Plan shape: a SINGLE scan pass computes the subject and every
@@ -1191,14 +1169,15 @@ class MappingPlanner:
         beside the other structs); only gathers build separate union
         branches.
 
-        This is the TM's OWN plan. ``compile_all`` uses it for every TM
-        that is not fused: TMs needing joins, gathers or a quoted
-        subject, TMs alone on their logical source, and narrow-dedup
-        recompiles. Single-pass TMs that share a source are instead
-        built by ``_tm_pass`` and emitted together by ``_emit_fused``.
+        This is the TM's OWN plan. ``compile_all`` uses it for every
+        compile unit of one TM that is not narrow (``_decide``): TMs
+        needing joins, gathers or a quoted subject, and TMs alone in
+        their (logical source, verdict) group. Single-pass TMs that
+        share a source and a verdict are instead built by ``_tm_pass``
+        and emitted together by ``_emit_fused``.
         """
         tp = self._tm_pass(tm, ExprLayers())
-        return None if tp is None else self._emit_tm(tp, narrow_refs)
+        return None if tp is None else self._emit_tm(tp)
 
     def _tm_pass(self, tm: TriplesMap, layers: ExprLayers) -> _TMPass | None:
         """Compile one TriplesMap's terms without building its plan: the
@@ -1307,7 +1286,11 @@ class MappingPlanner:
 
     def _emit_tm(self, tp: _TMPass,
                  narrow_refs: list[str] | None = None) -> DataFrame | None:
-        """A TriplesMap pass as its own plan (see ``compile_tm``)."""
+        """A TriplesMap pass as its own plan (see ``compile_tm``), or
+        None when it emits nothing. With ``narrow_refs`` (a narrow unit,
+        see ``_decide``) its entries dedup below rendering
+        (``_narrow_entries``); ``_tm_narrow_ok`` admitted no gather, so
+        the entries are all it emits."""
         tm, df, subject_term = tp.tm, tp.df, tp.subject_term
         entries = list(tp.entries)
         branches = list(tp.branches)
@@ -1342,14 +1325,10 @@ class MappingPlanner:
                     gdf = gdf.withColumn("__rule", F.lit(None).cast("string"))
                 branches.append(gdf)
 
-        if narrow_refs is not None:
+        if entries and narrow_refs is not None:
             # folded joins are fine: their left joins already applied
             # to base_df and their entries carry the rendered parent
             # objects, which are part of the narrow dedup key
-            if not entries or branches or tm.subject.term.kind == GATHER:
-                # shape drifted from what _tm_narrow_ok proved — let the
-                # caller fall back to the rendered distinct
-                return None
             return self._narrow_entries(tm, base_df, entries, narrow_refs,
                                         subject_term)
         if entries:
@@ -1362,13 +1341,14 @@ class MappingPlanner:
         return reduce(DataFrame.union, branches)
 
     def _emit_fused(self, passes: list[_TMPass]) -> DataFrame:
-        """ONE scan and ONE explode for single-pass TriplesMaps that share
-        a logical source and an ExprLayers (see ``compile_all``). Each
-        TM's subject and row filter become named columns, every struct
-        entry carries its own subject, and its validity is ANDed with its
-        TM's filter — the shape ``compile_tm`` builds within one TM,
-        extended across TMs. A single pass is exactly its own
-        ``compile_tm`` plan."""
+        """ONE scan and ONE explode for the passes of a fused compile
+        unit: single-pass TriplesMaps that share a logical source, a
+        dedup verdict and an ExprLayers (see ``_decide``). Each TM's
+        subject and row filter become named columns, every struct entry
+        carries its own subject, and its validity is ANDed with its TM's
+        filter — the shape ``compile_tm`` builds within one TM, extended
+        across TMs. A single pass is exactly its own ``compile_tm``
+        plan."""
         if len(passes) == 1:
             return self._emit_tm(passes[0])
         names: dict[tuple, str] = {}
@@ -1829,7 +1809,7 @@ class MappingPlanner:
             if shared and unique:
                 sel = self.persist(sel, StorageLevel.MEMORY_AND_DISK)
             grouped = sel.groupBy(*[f"__pk{i}" for i in range(len(pkeys))]).agg(
-                F.array_sort(F.collect_set("__po")).alias("__gi"))
+                F.sort_array(F.collect_set("__po")).alias("__gi"))
             if shared and not unique:
                 grouped = self.persist(grouped, StorageLevel.MEMORY_AND_DISK)
             return sel, grouped, small

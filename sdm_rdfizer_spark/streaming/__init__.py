@@ -99,8 +99,7 @@ class StreamingMappingPlanner(MappingPlanner):
                          collect_targets=collect_targets,
                          options=replace(options, dedup_elision=False))
 
-    def compile_tm(self, tm: TriplesMap,
-                   narrow_refs: list[str] | None = None) -> DataFrame:
+    def compile_tm(self, tm: TriplesMap) -> DataFrame:
         from ..ir import GATHER
 
         gathered = tm.subject.term.kind == GATHER or any(
@@ -117,7 +116,7 @@ class StreamingMappingPlanner(MappingPlanner):
                 f"collections need bounded input; run it as a batch "
                 f"materialization (or drive the stream with availableNow "
                 f"batch mode)")
-        return super().compile_tm(tm, narrow_refs=narrow_refs)
+        return super().compile_tm(tm)
 
     def scan(self, tm: TriplesMap) -> DataFrame:
         return self._once(("stream", tm.source.cache_key()),

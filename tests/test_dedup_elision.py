@@ -307,7 +307,22 @@ def narrow_always(monkeypatch):
     monkeypatch.setattr(plan_mod, "NARROW_DEDUP_MIN_BYTES", 0)
 
 
-def test_narrow_dedup_on_nonunique_int_parquet(spark, tmp_path, narrow_always):
+@pytest.fixture()
+def tm_passes(monkeypatch):
+    """The TriplesMaps ``MappingPlanner._tm_pass`` compiles, in call
+    order: one entry per compile of a TriplesMap's terms."""
+    calls = []
+    compile_pass = plan_mod.MappingPlanner._tm_pass
+
+    def counted(self, tm, layers):
+        calls.append(tm.tm_id.rsplit("#", 1)[-1])
+        return compile_pass(self, tm, layers)
+
+    monkeypatch.setattr(plan_mod.MappingPlanner, "_tm_pass", counted)
+    return calls
+
+
+def _dup_key_parquet(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
     # duplicate keys AND cross-row partial collisions: rows (1,ann,10) /
@@ -316,6 +331,11 @@ def test_narrow_dedup_on_nonunique_int_parquet(spark, tmp_path, narrow_always):
                              "name": ["ann", "ann", "ann", "bob"],
                              "score": [10, 10, 99, 20]}),
                    str(tmp_path / "u.parquet"))
+
+
+def test_narrow_dedup_on_nonunique_int_parquet(spark, tmp_path, narrow_always,
+                                               tm_passes):
+    _dup_key_parquet(tmp_path)
     m = PFX + f"""
 <#M> a rr:TriplesMap;
   rml:logicalSource [ rml:source "{tmp_path}/u.parquet"; rml:referenceFormulation ql:Parquet ];
@@ -324,6 +344,8 @@ def test_narrow_dedup_on_nonunique_int_parquet(spark, tmp_path, narrow_always):
   rr:predicateObjectMap [ rr:predicate ex:score; rr:objectMap [ rml:reference "score" ] ] .
 """
     fast = materialize(spark, m)
+    # the narrow verdict is decided before compile: one pass, no recompile
+    assert tm_passes == ["M"]
     slow = materialize(spark, m, dedup_elision=False)
     assert _narrow_fired(fast), _plan(fast)
     assert not _narrow_fired(slow)
@@ -331,6 +353,36 @@ def test_narrow_dedup_on_nonunique_int_parquet(spark, tmp_path, narrow_always):
     got = sorted(map(tuple, fast.collect()))
     assert got == sorted(map(tuple, slow.collect()))
     # duplicates actually collapsed: 2 subjects x (type+name) + 3 scores
+    assert len(got) == 7
+
+
+def test_two_narrow_tms_on_one_source_compile_once(spark, tmp_path,
+                                                   narrow_always, tm_passes):
+    """Two single-pass TriplesMaps on one source, both narrow: each is
+    a compile unit of its own, compiled by one ``_tm_pass``."""
+    _dup_key_parquet(tmp_path)
+    src = (f'[ rml:source "{tmp_path}/u.parquet"; '
+           'rml:referenceFormulation ql:Parquet ]')
+    m = PFX + f"""
+<#M> a rr:TriplesMap; rml:logicalSource {src};
+  rr:subjectMap [ rr:template "http://ex.org/i/{{id}}"; rr:class ex:Item ];
+  rr:predicateObjectMap [ rr:predicate ex:name; rr:objectMap [ rml:reference "name" ] ] .
+<#N> a rr:TriplesMap; rml:logicalSource {src};
+  rr:subjectMap [ rr:template "http://ex.org/j/{{id}}" ];
+  rr:predicateObjectMap [ rr:predicate ex:score; rr:objectMap [ rml:reference "score" ] ] .
+"""
+    fast = materialize(spark, m)
+    assert sorted(tm_passes) == ["M", "N"]
+    # one distinct below rendering per TM, and no rendered distinct
+    plan = fast._jdf.queryExecution().optimizedPlan().toString()
+    narrow = [ln for ln in plan.splitlines()
+              if "Aggregate [" in ln and "__pi" in ln]
+    assert len(narrow) == 2, plan
+    assert _shuffles(fast) == 2, _plan(fast)
+    slow = materialize(spark, m, dedup_elision=False)
+    got = sorted(map(tuple, fast.collect()))
+    assert got == sorted(map(tuple, slow.collect()))
+    # M: 2 subjects x (type + name); N: 3 distinct scores
     assert len(got) == 7
 
 

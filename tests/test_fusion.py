@@ -123,7 +123,11 @@ def test_json_reader_count_does_not_download(spark, tmp_path, monkeypatch):
 
 def test_fused_json_pass_skips_checkpoint(spark, tmp_path):
     """Two TriplesMaps over one JSON document fuse into one reader, so
-    the document is scanned once and not eagerly checkpointed."""
+    the document is scanned once and not eagerly checkpointed. Over a
+    flat JSONL file, two TriplesMaps with different dedup verdicts (a
+    unique subject key: no distinct; a repeated one: its own distinct)
+    are two passes, so the file is parsed at most once (checkpointed),
+    not once per pass."""
     (tmp_path / "d.json").write_text('[{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]')
     src = f'[ rml:source "{tmp_path}/d.json"; ' \
           'rml:referenceFormulation ql:JSONPath; rml:iterator "$[*]" ]'
@@ -138,3 +142,23 @@ def test_fused_json_pass_skips_checkpoint(spark, tmp_path):
     assert plan.count("FileScan json") == 1, plan
     assert "ExistingRDD" not in plan, plan
     assert df.count() == 4
+
+    (tmp_path / "d.jsonl").write_text(
+        '{"id": 1, "v": "a"}\n{"id": 2, "v": "a"}\n{"id": 3, "v": "b"}\n')
+    src = f'[ rml:source "{tmp_path}/d.jsonl"; ' \
+          'rml:referenceFormulation ql:JSONPath; rml:iterator "$" ]'
+    m = PREFIXES + f"""
+<#U> a rr:TriplesMap; rml:logicalSource {src};
+  rr:predicateObjectMap [ rr:predicate ex:pu; rr:objectMap [ rml:reference "v" ] ];
+  rr:subjectMap [ rr:template "http://ex.org/r/{{id}}" ] .
+<#V> a rr:TriplesMap; rml:logicalSource {src};
+  rr:predicateObjectMap [ rr:predicate ex:pv; rr:objectMap [ rml:reference "id" ] ];
+  rr:subjectMap [ rr:template "http://ex.org/v/{{v}}" ] .
+"""
+    df = materialize(spark, m)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan json") <= 1, plan
+    got = Counter(tuple(r) for r in df.collect())
+    assert got == Counter(tuple(r) for r in
+                          materialize(spark, m, dedup_elision=False).collect())
+    assert len(got) == 6

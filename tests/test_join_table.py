@@ -171,3 +171,9 @@ def test_join_tables_match_duckdb_join(spark, tmp_path_factory, parent,
                      remove_duplicates=False)
     got = _actual(tuple(r) for r in df.select("s", "p", "o").collect())
     assert got == _expected(ppath, cpath)
+    # grouped terms are sorted by generated code (sort_array), not by
+    # array_sort's lambda comparator (the gather's own transform/filter
+    # lambdas stay, so the check names the sort)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_sort" not in plan, plan
+    assert "sort_array(collect_set(" in plan, plan
